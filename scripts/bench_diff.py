@@ -10,6 +10,10 @@ For each query present in both files, the delta is labeled:
   NOISE  — fingerprint identical: the plan Spark chose is byte-identical,
            so the timing delta is machine load / JIT / GC, not a change
            in the engine.
+When both files carry Bench's per-query `jobs` map, a changed Spark job
+count is structural signal too: the row shows `jobs OLD->NEW` and is
+listed even when its timing delta is under the threshold. Files without
+the map (older benches, BENCH_rNN.json wrappers) diff as before.
 Queries only in one file are listed as ADDED/REMOVED.
 """
 import json
@@ -98,11 +102,13 @@ def main(old_path, new_path, threshold=0.25):
     # its n runs; a large median-min spread marks a query whose timing
     # is dominated by contention/JIT, so its delta carries a '~' marker
     omed, nmed = old.get("queries_median", {}), new.get("queries_median", {})
+    ojobs, njobs = old.get("jobs", {}), new.get("jobs", {})
 
     rows = []
     for k in sorted(set(oq) & set(nq)):
         d = nq[k] - oq[k]
-        if abs(d) < threshold:
+        jobs_changed = k in ojobs and k in njobs and ojobs[k] != njobs[k]
+        if abs(d) < threshold and not jobs_changed:
             continue
         fp_known = k in ofp and k in nfp
         fp_changed = fp_known and (
@@ -110,11 +116,13 @@ def main(old_path, new_path, threshold=0.25):
         label = "PLAN " if fp_changed else ("NOISE" if fp_known else "??   ")
         spread = max(omed.get(k, oq[k]) - oq[k], nmed.get(k, nq[k]) - nq[k])
         noisy = "~" if spread > max(threshold, 0.3 * abs(d)) else " "
-        rows.append((abs(d), label, noisy, k, oq[k], nq[k], d,
+        jobs = f"jobs {ojobs[k]}->{njobs[k]}" if jobs_changed else ""
+        rows.append((abs(d), label, noisy, k, oq[k], nq[k], d, jobs,
                      f"{ofp.get(k,'-')} -> {nfp.get(k,'-')}" if fp_changed else ""))
     rows.sort(reverse=True)
-    for _, label, noisy, k, o, n, d, fp in rows:
-        print(f"{label}{noisy} {k:36s} {o:7.2f} -> {n:7.2f}  ({d:+.2f} s)  {fp}")
+    for _, label, noisy, k, o, n, d, jobs, fp in rows:
+        print(f"{label}{noisy} {k:36s} {o:7.2f} -> {n:7.2f}  ({d:+.2f} s)  "
+              f"{jobs:14s} {fp}".rstrip())
 
     for k in sorted(set(nq) - set(oq)):
         print(f"ADDED {k:36s}            {nq[k]:7.2f}")
@@ -125,6 +133,11 @@ def main(old_path, new_path, threshold=0.25):
     totals = (f"total: {ot:.1f} -> {nt:.1f} s"
               if isinstance(ot, (int, float)) and isinstance(nt, (int, float))
               else "total: n/a (missing 'value' in one file)")
+    common_jobs = [k for k in set(oq) & set(nq) if k in ojobs and k in njobs]
+    if common_jobs:
+        n_changed = sum(ojobs[k] != njobs[k] for k in common_jobs)
+        print(f"\njobs: {n_changed}/{len(common_jobs)} queries changed Spark "
+              f"job count")
     print(f"\n{totals} "
           f"(loadavg {old.get('loadavg','?')} -> {new.get('loadavg','?')}); "
           f"deltas >= {threshold}s shown; PLAN = fingerprint changed, "

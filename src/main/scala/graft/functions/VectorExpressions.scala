@@ -656,6 +656,14 @@ case class VecQuantizeFixed(child: Expression, scale: Long)
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"quantize_fixed requires array<float> input, got $t")
+    }
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null

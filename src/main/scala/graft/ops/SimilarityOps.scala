@@ -1249,8 +1249,8 @@ object SimilarityOps {
   case class IvfMeasurement(nCentroids: Int, nProbe: Int,
       recallPpm: Long, rerankRows: Long)
 
-  /** Default (K, nProbe) search grid for [[tuneIvf]] — the ladder the
-    * manual IvfSweep walked, cheap to thorough. */
+  /** Default (K, nProbe) search grid for [[tuneIvf]], cheap to
+    * thorough. */
   val DefaultIvfGrid: Seq[(Int, Int)] = Seq(
     (16, 4), (16, 8), (32, 8), (32, 12), (64, 8), (64, 12), (64, 16),
     (64, 20), (64, 24))

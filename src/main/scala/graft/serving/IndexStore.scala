@@ -108,14 +108,15 @@ object IndexStore {
     * thread pool so one job's straggler/commit tail back-fills with the
     * next job's tasks (guide §2.6 — actions are only sequential because
     * the driver calls them sequentially). The lifecycle compositions
-    * here are JOB-COUNT bound at bench scale (r16 JobGapProbe: parquet
-    * write commands + per-table planning dominate the wall, scaling
-    * ratio ≈ 1 from 8→32 cores), and each stage's writes land in
-    * DIFFERENT table directories of the same uncommitted generation —
-    * independent by construction. The generation manifest commits only
-    * after every branch finished; any branch failure propagates before
-    * the commit, so a half-written generation stays an uncommitted
-    * orphan exactly as in the sequential form. */
+    * here are JOB-COUNT bound at bench scale (parquet write commands +
+    * per-table planning dominate the wall, as Bench's per-query `jobs`
+    * and `gap_s` fields show; scaling ratio ≈ 1 from 8→32 cores), and
+    * each stage's writes land in DIFFERENT table directories of the
+    * same uncommitted generation — independent by construction. The
+    * generation manifest commits only after every branch finished; any
+    * branch failure propagates before the commit, so a half-written
+    * generation stays an uncommitted orphan exactly as in the
+    * sequential form. */
   private def inParallel(stages: (() => Unit)*): Unit =
     if (stages.sizeIs <= 1) stages.foreach(_.apply())
     else {
@@ -1285,9 +1286,16 @@ object IndexStore {
   private def writeLayerMeta(spark: SparkSession, path: String,
       layers: Int): Unit = {
     val f = fs(spark, path)
-    val out = f.create(new org.apache.hadoop.fs.Path(path + ".json"), true)
-    out.write(s"""{"layers":$layers}""".getBytes("UTF-8"))
-    out.close()
+    val dst = new org.apache.hadoop.fs.Path(path + ".json")
+    val tmp = new org.apache.hadoop.fs.Path(path + ".json.tmp")
+    val out = f.create(tmp, true)
+    try out.write(s"""{"layers":$layers}""".getBytes("UTF-8")) finally out.close()
+    // written whole, then renamed into place: a reader never sees a
+    // partial file. rename does not replace on every FileSystem, and a
+    // previous copy exists only in an orphaned generation being rewritten
+    if (f.exists(dst)) f.delete(dst, false)
+    if (!f.rename(tmp, dst))
+      throw new java.io.IOException(s"could not rename $tmp to $dst")
   }
 
   private val LayersRe = """\{"layers":(\d+)\}""".r

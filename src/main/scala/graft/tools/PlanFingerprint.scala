@@ -81,8 +81,8 @@ object PlanFingerprint {
     * ("$Lambda$3667/0x00007fb6...@71bb6009") — JVM memory addresses;
     * (c) exprIds and subquery/exchange tags ("l_orderkey#123",
     * "scalar-subquery#123", "[id=#45]") — session counters. Exposed
-    * (not inlined in [[of]]) so the stability spec and the FpDebug
-    * tool can diff the exact hashed bytes when a mask class is missing.
+    * (not inlined in [[of]]) so the stability spec can diff the exact
+    * hashed bytes when a mask class is missing.
     */
   def canonText(plan: org.apache.spark.sql.execution.SparkPlan): String =
     mask(plan.toString)

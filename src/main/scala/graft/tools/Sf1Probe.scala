@@ -95,7 +95,7 @@ object Sf1Probe {
       // emb_dedup_keep "slope 2.10" divided by a cold-start-inflated
       // sf0.1 denominator (10.12 s probed vs 1.97 s idle bench). sf1:
       // the heavy inner loops only reach C2 + a warmed execution-memory
-      // pool at sf1 iteration counts — StageProf measured the
+      // pool at sf1 iteration counts — a per-stage profile measured the
       // candidate-distinct stage of emb_dedup_keep at 436 task-seconds
       // cold vs 71 warm (same JVM, same input, 407 MB shuffle write
       // both times), a 6× first-run artifact that sf0.1 warmup does

@@ -10,8 +10,7 @@ import graft.pipeline.{Analyzer, AnalyzerParams}
   */
 class AnalyzerGoldenSpec extends AnyFunSuite {
 
-  private val fixture =
-    "/root/reference/test_data/Brazos_NGL and Delaware_Gas combined.kmz"
+  private val fixture = graft.queries.PipelineQueries.FixtureKmz
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")

@@ -8,7 +8,7 @@ object DriveAnalyzer {
       .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val an = new Analyzer(AnalyzerParams(compat = true))
-    val r = an.analyze(spark, "/root/reference/test_data/Brazos_NGL and Delaware_Gas combined.kmz")
+    val r = an.analyze(spark, graft.queries.PipelineQueries.FixtureKmz)
     println(f"SUMMARY pipelines=${r.summary.nPipelines} placemarks=${r.summary.nPlacemarks} " +
       f"totalMi=${r.summary.totalMiles}%.6f segs=${r.summary.nSegments} groups=${r.summary.nPairGroups} " +
       f"sections=${r.summary.nBundledSections} bundledM=${r.summary.totalBundledMeters}%.0f " +

@@ -24,8 +24,7 @@ import graft.sources.KmlSource
   */
 object FixtureScale {
 
-  private val fixture =
-    "/root/reference/test_data/Brazos_NGL and Delaware_Gas combined.kmz"
+  private val fixture = graft.queries.PipelineQueries.FixtureKmz
 
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(100)

@@ -9,8 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-side parse path. */
 class KmzDataSourceSpec extends AnyFunSuite {
 
-  private val fixture =
-    "/root/reference/test_data/Brazos_NGL and Delaware_Gas combined.kmz"
+  private val fixture = graft.queries.PipelineQueries.FixtureKmz
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

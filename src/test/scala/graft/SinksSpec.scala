@@ -13,8 +13,7 @@ import graft.sources.KmlParser
   */
 class SinksSpec extends AnyFunSuite {
 
-  private val fixture =
-    "/root/reference/test_data/Brazos_NGL and Delaware_Gas combined.kmz"
+  private val fixture = graft.queries.PipelineQueries.FixtureKmz
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
