@@ -60,7 +60,6 @@ object GraphOps {
     *        same min). */
   def ccWithStats(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 30, edgesUnique: Boolean = false): (DataFrame, Int) = {
-    val sess = edges.sparkSession
     // Symmetrize in ONE pass over the (possibly expensive) edge
     // derivation: the union form ran the whole upstream pipeline once
     // per branch — for LSH/near-dup candidate generators that was the
@@ -87,12 +86,7 @@ object GraphOps {
     // At 100 TB the composition discipline already bounds hubs —
     // exact-dup collapse first keeps the candidate graph near-linear —
     // and removing per-round |E| shuffles is the dominant term.
-    val parts = pinnedPartitions(sess, nSym)
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val sym = try org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(
-      symCk.repartition(parts, col("src")).sortWithinPartitions("src"))
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val (sym, parts) = pinnedLayout(symCk, "src", nSym)
     // Iterate ONLY over edge-touched vertices: in a dedup graph the
     // overwhelming majority of docs has no candidate edge at all, and
     // an isolated vertex can never change label — keeping them out of
@@ -267,6 +261,25 @@ object GraphOps {
       sess.sessionState.conf.numShufflePartitions.toLong,
       (rows + PinRowsPerPartition - 1) / PinRowsPerPartition)).toInt
 
+  /** Pinned loop-invariant layout of `df` on `key`: repartitioned into
+    * [[pinnedPartitions]]`(rows)` parts, sorted within partitions and
+    * checkpointed with AQE off for THIS compilation only, so the
+    * checkpoint's LogicalRDD carries the HashPartitioning + ordering
+    * and every round's join reuses it. Returns the layout and its
+    * partition count (the loop pins its other join side to the same
+    * count). Toggles the session's conf around the compilation — the
+    * one place that workaround lives. */
+  private[graft] def pinnedLayout(df: DataFrame, key: String,
+      rows: Long): (DataFrame, Int) = {
+    val sess = df.sparkSession
+    val parts = pinnedPartitions(sess, rows)
+    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled")
+    sess.conf.set("spark.sql.adaptive.enabled", "false")
+    try (org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(
+        df.repartition(parts, col(key)).sortWithinPartitions(key)), parts)
+    finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+  }
+
   def pageRankFixed(edges: DataFrame, iters: Int = 5): DataFrame = {
     // materialize the symmetrized edges once: deg and symd both read
     // them, and the caller's edge derivation may be expensive. r17:
@@ -311,7 +324,6 @@ object GraphOps {
     // fixed-shape repartition+sort over the joined RDD compiles
     // non-adaptively; that checkpoint is LAZY, so the join and the
     // layout pass materialize in ONE job instead of two)
-    val sess = edges.sparkSession
     // one scalar action for BOTH loop literals: N (the teleport term,
     // folded into codegen — not a per-round collect) and |sym| (the
     // pinned-layout partition cap); deg's lazy checkpoint materializes
@@ -319,17 +331,10 @@ object GraphOps {
     val dstat = deg.agg(count(lit(1)), sum("dg")).first()
     val n = dstat.getLong(0)
     val nSym = dstat.getLong(1)
-    val parts = pinnedPartitions(sess, nSym)
     val symdRaw = sym
       .join(deg.select(col("node").as("src"), col("dg")), "src")
       .localCheckpoint(eager = false)
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val symd = try org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(
-      symdRaw
-        .repartition(parts, col("src"))
-        .sortWithinPartitions("src"))
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val (symd, parts) = pinnedLayout(symdRaw, "src", nSym)
     val scale = 1000000000000L
     val tele = (15L * scale) / (100L * n)
     var ranks = deg.select(col("node"), lit(scale / n).as("r"))

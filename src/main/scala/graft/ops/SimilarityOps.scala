@@ -45,6 +45,134 @@ object SimilarityOps {
   private[graft] def definedNrm(nrm: Column): Column =
     coalesce(nrm > 0d && !isnan(nrm), lit(false))
 
+  // ---------------------------------------------------- shared ANN core
+  // One definition of each block the ANN rungs compose: query/corpus
+  // frames, first-K cells, the code-stage shortlist, the broadcast
+  // rerank, and the recall audit with its micro-averaged ppm. Each
+  // helper's op sequence IS the rungs' physical plan: editing one moves
+  // every caller's plan fingerprint (bench_diff PLAN rows).
+
+  /** Query batch (q_id, q_emb) for the L2/dot rungs — no norm screen. */
+  private def rawQueries(embeddings: DataFrame, queryPred: Column): DataFrame =
+    embeddings.filter(queryPred)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Corpus (n_id, n_emb) for the L2/dot rungs — no norm screen. */
+  private def rawCorpus(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
+
+  /** Cosine query batch (q_id, q_emb, q_nrm), screened by [[definedNrm]]. */
+  private def cosQueries(embeddings: DataFrame, queryPred: Column): DataFrame =
+    embeddings.filter(queryPred)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        norm(col("embedding")).as("q_nrm"))
+      .filter(definedNrm(col("q_nrm")))
+
+  /** Cosine corpus (n_id, n_emb, n_nrm), screened by [[definedNrm]]. */
+  private def cosCorpus(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
+      norm(col("embedding")).as("n_nrm"))
+      .filter(definedNrm(col("n_nrm")))
+
+  /** Screened corpus (vec_id, embedding, nrm, extra…) — the vector side
+    * of every cell assignment. */
+  private def screenedVecs(embeddings: DataFrame,
+      extra: Seq[Column] = Nil): DataFrame =
+    embeddings.select(Seq(col("vec_id"), col("embedding"),
+        norm(col("embedding")).as("nrm")) ++ extra: _*)
+      .filter(definedNrm(col("nrm")))
+
+  /** Coarse cells of the IVF-style rungs: the screened first-K sample
+    * centroids (cid, c_emb, c_nrm) — or the caller's `centroids`, given
+    * the same screen (a degenerate centroid must not own a cell) — and
+    * the [[screenedVecs]] corpus. `k` is by-name, so with caller
+    * centroids a count-driven K is never resolved. */
+  private def firstKCells(embeddings: DataFrame, k: => Int,
+      centroids: Option[DataFrame] = None,
+      extra: Seq[Column] = Nil): (DataFrame, DataFrame) = {
+    val cents = centroids.getOrElse(
+      embeddings.filter(col("vec_id") < k)
+        .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
+          norm(col("embedding")).as("c_nrm")))
+      .filter(definedNrm(col("c_nrm")))
+    (cents, screenedVecs(embeddings, extra))
+  }
+
+  /** Exact cosine top-`n` per query as a map-side partial top-k
+    * ([[graft.functions.TopKSimAgg]]), posexploded: (q_id, pos,
+    * col = {n_id, sim}). */
+  private def cosineTopN(embeddings: DataFrame, queryPred: Column,
+      n: Int): DataFrame = {
+    val topk = udaf(new graft.functions.TopKSimAgg(n))
+    cosCorpus(embeddings)
+      .join(broadcast(cosQueries(embeddings, queryPred)), col("q_id") =!= col("n_id"))
+      .withColumn("sim", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
+      .groupBy("q_id")
+      .agg(topk(col("n_id"), col("sim")).as("top"))
+      .select(col("q_id"), posexplode(col("top")))
+  }
+
+  /** Code-stage shortlist of scored (q_id, n_id) rows: the per-query
+    * top-`shortlist` ids by `score` (higher is better — negate a
+    * distance) as a map-side partial top-k, exploded to (q_id, n_id). */
+  private def shortlistIds(scored: DataFrame, shortlist: Int,
+      score: Column): DataFrame = {
+    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
+    scored
+      .groupBy("q_id")
+      .agg(short(col("n_id"), score).as("top"))
+      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
+  }
+
+  /** Exact rerank of a (q_id, n_id) shortlist: the shortlist and the
+    * query batch are broadcast (both ≤ |Q|·shortlist rows) and the
+    * corpus streams through them — the stats-driven pick would
+    * broadcast the corpus at test scale, which inverts at 100 TB.
+    * `value` is stored as column `score`, ranked per query by
+    * (score, n_id ASC), and the top k are emitted as (q_id, n_id, rank,
+    * round(score, 6)). */
+  private def rerankTopK(corpus: DataFrame, cand: DataFrame, q: DataFrame,
+      k: Int, score: String, value: Column, ascending: Boolean): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    val wRank = Window.partitionBy("q_id").orderBy(order, col("n_id").asc)
+    corpus
+      .join(broadcast(cand), "n_id")
+      .join(broadcast(q), "q_id")
+      .withColumn(score, value)
+      .withColumn("rank", row_number().over(wRank))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
+        round(col(score), 6).as(score))
+  }
+
+  /** Recall in exact integer ppm of an (n_hit, n_exact) row. */
+  private def recallPpm: Column =
+    expr("(n_hit * 1000000) div greatest(n_exact, 1)")
+
+  /** Per-query recall audit: the `approx` top-k against the `exact`
+    * (q_id, n_id) truth set, as (q_id, n_exact, n_hit, recall_ppm). */
+  private def recallAudit(exact: DataFrame, approx: DataFrame): DataFrame = {
+    val served = approx.select(col("q_id").as("q2"), col("n_id").as("n2"))
+    val hits = exact
+      .join(served, col("q_id") === col("q2") && col("n_id") === col("n2"))
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
+    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
+      .join(hits, Seq("q_id"), "left")
+      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      .withColumn("recall_ppm", recallPpm)
+  }
+
+  /** Micro-averaged recall of a [[recallAudit]] frame in exact ppm,
+    * Σn_hit·10⁶ div max(Σn_exact, 1) — the tuners' measurement. An
+    * empty audit (the query predicate matched nothing) sums to NULL
+    * and reads 0 rather than throwing. */
+  private def microPpm(audit: DataFrame): Long = {
+    val r = audit.agg(coalesce(sum("n_hit"), lit(0L)).as("h"),
+        coalesce(sum("n_exact"), lit(0L)).as("e"))
+      .collect()(0)
+    r.getLong(0) * 1000000L / math.max(r.getLong(1), 1L)
+  }
+
   /** Exact cosine top-k neighbors for query vectors. Norms are computed
     * once per side BEFORE the join — the naive per-pair cosine pays the
     * two norm traversals |Q|×|C| times instead of |Q|+|C|.
@@ -56,24 +184,11 @@ object SimilarityOps {
     * each corpus partition keeps only its local k best per query, so
     * the shuffle carries ≤ k·partitions rows per query instead of the
     * whole |Q|×|C| similarity matrix through a window sort. */
-  def bruteForceTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"))
-      .filter(definedNrm(col("q_nrm")))
-    val c = embeddings.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-      norm(col("embedding")).as("n_nrm"))
-      .filter(definedNrm(col("n_nrm")))
-    val topk = udaf(new graft.functions.TopKSimAgg(k))
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("sim", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-      .groupBy("q_id")
-      .agg(topk(col("n_id"), col("sim")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
+  def bruteForceTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame =
+    cosineTopN(embeddings, queryPred, k)
       .select(col("q_id"), col("col.n_id").as("n_id"),
         (col("pos") + 1).cast("long").as("rank"),
         round(col("col.sim"), 6).as("sim"))
-  }
 
   /** Two-level RESIDUAL quantization encode (the additive-codebook VQ
     * modern ANN serving stacks layer under PQ): level-1 Lloyd
@@ -142,24 +257,9 @@ object SimilarityOps {
       .join(broadcast(queries), col("q_id") =!= col("n_id"))
       .withColumn("adist",
         graft.functions.VectorFunctions.vec_l2sq_long(col("q_qv"), col("rv")))
-    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
-    val cand = adist
-      .groupBy("q_id")
-      .agg(short(col("n_id"), -col("adist").cast("double")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
-    val corpus = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"))
-    val qe = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wRank = Window.partitionBy("q_id").orderBy(col("dist").asc, col("n_id").asc)
-    corpus
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(qe), "q_id")
-      .withColumn("dist", sqdist(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("dist"), 6).as("dist"))
+    val cand = shortlistIds(adist, shortlist, -col("adist").cast("double"))
+    rerankTopK(rawCorpus(embeddings), cand, rawQueries(embeddings, queryPred), k,
+      "dist", sqdist(col("q_emb"), col("n_emb")), ascending = true)
   }
 
   /** SQL replay of [[rqEncode]]/[[rqTopK]]: the shared Lloyd CTE chain
@@ -268,36 +368,20 @@ object SimilarityOps {
     * reference side of the RQ recall audit; same broadcast-queries /
     * map-side partial top-k shape as [[bruteForceTopK]]. */
   private def l2TopK(embeddings: DataFrame, queryPred: Column,
-      k: Int): DataFrame = {
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val c = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"))
-    val topk = udaf(new graft.functions.TopKSimAgg(k))
-    c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("sim", -sqdist(col("q_emb"), col("n_emb")))
-      .groupBy("q_id")
-      .agg(topk(col("n_id"), col("sim")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
-  }
+      k: Int): DataFrame =
+    shortlistIds(
+      rawCorpus(embeddings)
+        .join(broadcast(rawQueries(embeddings, queryPred)), col("q_id") =!= col("n_id"))
+        .withColumn("sim", -sqdist(col("q_emb"), col("n_emb"))),
+      k, col("sim"))
 
   /** RQ recall audit — [[rqTopK]] against the exhaustive L2 reference,
     * per query in exact ppm (the [[ivfRecall]] pattern). */
   def rqRecall(embeddings: DataFrame, queryPred: Column, k: Int = 10,
       shortlist: Int = PqShortlist, k1: Int = 16, r1: Int = 2,
-      k2: Int = 16, r2: Int = 2): DataFrame = {
-    val exact = l2TopK(embeddings, queryPred, k)
-    val approx = rqTopK(embeddings, queryPred, k, shortlist, k1, r1, k2, r2)
-      .select(col("q_id").as("q2"), col("n_id").as("n2"))
-    val hits = exact
-      .join(approx, col("q_id") === col("q2") && col("n_id") === col("n2"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
-  }
+      k2: Int = 16, r2: Int = 2): DataFrame =
+    recallAudit(l2TopK(embeddings, queryPred, k),
+      rqTopK(embeddings, queryPred, k, shortlist, k1, r1, k2, r2))
 
   /** SELF-MEASURING recall audit: IVF top-k against brute-force top-k,
     * per query, recall in exact ppm — the accuracy dashboard an ANN
@@ -310,20 +394,10 @@ object SimilarityOps {
     * and runs on the SAMPLED query set only — the standard production
     * recall estimator. */
   def ivfRecall(embeddings: DataFrame, queryPred: Column, k: Int = 10,
-      nCentroids: Int = IvfCentroids, nProbe: Int = IvfProbe): DataFrame = {
-    val exact = bruteForceTopK(embeddings, queryPred, k)
-      .select(col("q_id"), col("n_id"))
-    val approx = ivfTopK(embeddings, queryPred, k, nCentroids, nProbe)
-      .select(col("q_id").as("q2"), col("n_id").as("n2"))
-    val hits = exact
-      .join(approx, col("q_id") === col("q2") && col("n_id") === col("n2"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
-  }
+      nCentroids: Int = IvfCentroids, nProbe: Int = IvfProbe): DataFrame =
+    recallAudit(
+      bruteForceTopK(embeddings, queryPred, k).select(col("q_id"), col("n_id")),
+      ivfTopK(embeddings, queryPred, k, nCentroids, nProbe))
 
   /** Serving RANKING audit (Mean-Reciprocal-Rank) — the ORDER-quality
     * companion of [[ivfRecall]]'s membership audit: recall@k says the
@@ -462,23 +536,9 @@ object SimilarityOps {
       prefixDim: Int = MrlPrefixDim, shortlist: Int = PqShortlist): DataFrame = {
     val cand = prefixShortlist(embeddings, queryPred, shortlist, prefixDim)
       .select(col("q_id"), col("n_id"))
-    val corpus = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"), norm(col("embedding")).as("n_nrm"))
-      .filter(definedNrm(col("n_nrm")))
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"))
-      .filter(definedNrm(col("q_nrm")))
-    val wRank = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    corpus
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("sim",
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("sim"), 6).as("sim"))
+    rerankTopK(cosCorpus(embeddings), cand, cosQueries(embeddings, queryPred), k,
+      "sim", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")),
+      ascending = false)
   }
 
   /** MRL TRUNCATION AUDIT — recall@k of the prefix-cosine ranking vs
@@ -505,9 +565,7 @@ object SimilarityOps {
         .select(col("q_id"), lit(d.toLong).as("prefix_dim"),
           col("n_exact"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
     }
-    arms.reduce(_.union(_))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
+    arms.reduce(_.union(_)).withColumn("recall_ppm", recallPpm)
   }
 
   /** LSH near-dup RECALL audit vs exhaustive pairs, banded by
@@ -759,13 +817,9 @@ object SimilarityOps {
     * per-dimension mean, so the trained path is spec-measured, not
     * DuckDB-oracle-checkable. */
   def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int = 3): DataFrame = {
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm"))) // zero/NaN-norm rows can't vote
-    var cents = embeddings.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
+    // screened: zero/NaN-norm rows can't vote
+    val (seeds, vecs) = firstKCells(embeddings, k)
+    var cents = seeds
     for (_ <- 0 until iters) {
       val assigned = assignBest(vecs, cents,
         struct(col("embedding").as("emb"), col("cid")))
@@ -994,14 +1048,25 @@ object SimilarityOps {
       centroids: Option[DataFrame] = None): DataFrame = {
     val (assign, probes) = ivfCandFrames(embeddings, queryPred, nCentroids,
       nProbe, centroids)
+    cellTopK(probes, assign, k)
+  }
+
+  /** The rerank candidates: every (query, member) pair of the probed
+    * cells, the query itself excluded. */
+  private def cellCands(probes: DataFrame, assign: DataFrame): DataFrame =
+    probes.join(assign, Seq("cid")).filter(col("q_id") =!= col("n_id"))
+
+  /** Exact cosine top-k over the probed cells' members: (q_id, n_id,
+    * extra…, rank, sim), ties (sim DESC, n_id ASC). */
+  private def cellTopK(probes: DataFrame, assign: DataFrame, k: Int,
+      extra: Seq[Column] = Nil): DataFrame = {
     val wRank = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    probes.join(assign, Seq("cid"))
-      .filter(col("q_id") =!= col("n_id"))
+    cellCands(probes, assign)
       .withColumn("sim", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("sim"), 6).as("sim"))
+      .select(Seq(col("q_id"), col("n_id")) ++ extra ++
+        Seq(col("rank").cast("long").as("rank"), round(col("sim"), 6).as("sim")): _*)
   }
 
   /** Radius threshold for the driver's `sim_radius_search` query —
@@ -1032,8 +1097,7 @@ object SimilarityOps {
       nProbe: Int = IvfProbe): DataFrame = {
     val (assign, probes) = ivfCandFrames(embeddings, queryPred, nCentroids,
       nProbe, None)
-    probes.join(assign, Seq("cid"))
-      .filter(col("q_id") =!= col("n_id"))
+    cellCands(probes, assign)
       .withColumn("sim_u",
         round(dot(col("q_emb"), col("n_emb")) /
           (col("q_nrm") * col("n_nrm")) * 1e6).cast("long"))
@@ -1066,41 +1130,16 @@ object SimilarityOps {
   def filteredTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10,
       nCentroids: Int = IvfCentroids, nProbe: Int = IvfProbe,
       labelMod: Long = FilterLabelMod): DataFrame = {
-    val cents = embeddings.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm"),
-        col("label").cast("long").as("n_label"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, nCentroids,
+      extra = Seq(col("label").cast("long").as("n_label")))
     val assign = assignBest(vecs, cents,
         struct(col("embedding").as("n_emb"), col("nrm").as("n_nrm"),
           col("cid"), col("n_label")))
       .select(col("vec_id").as("n_id"), col("best.n_emb").as("n_emb"),
         col("best.n_nrm").as("n_nrm"), col("best.cid").as("cid"),
         col("best.n_label").as("n_label"))
-    val wProbe = Window.partitionBy("q_id")
-      .orderBy(col("c_sim").desc, col("cid").asc)
-    val probes = vecs.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-      .join(broadcast(cents), lit(true))
-      .withColumn("c_sim",
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cid"))
-    val wRank = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("n_id").asc)
-    probes.join(assign.filter(col("n_label") % labelMod === 0), Seq("cid"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim",
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("n_label"),
-        col("rank").cast("long").as("rank"), round(col("sim"), 6).as("sim"))
+    cellTopK(probeCells(vecs, cents, queryPred, nProbe),
+      assign.filter(col("n_label") % labelMod === 0), k, Seq(col("n_label")))
   }
 
   /** Scatter-gather QUERY ROUTER — the shard-routing table a
@@ -1123,13 +1162,7 @@ object SimilarityOps {
     * pay. */
   def queryRouter(embeddings: DataFrame, queryPred: Column,
       nCentroids: Int = IvfCentroids, nProbe: Int = IvfProbe): DataFrame = {
-    val cents = embeddings.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, nCentroids)
     val cellSizes = assignBest(vecs, cents, struct(col("cid")))
       .select(col("best.cid").as("cid"))
       .groupBy("cid").agg(count(lit(1)).as("cell_n_vecs"))
@@ -1174,13 +1207,7 @@ object SimilarityOps {
     * [[autoCentroids]]); the corpus is never shuffled. */
   def shardPlan(embeddings: DataFrame, nShards: Int = ServeShards,
       nCentroids: Int = IvfCentroids): DataFrame = {
-    val cents = embeddings.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, nCentroids)
     val cellSizes = assignBest(vecs, cents, struct(col("cid")))
       .select(col("best.cid").as("cid"))
       .groupBy("cid").agg(count(lit(1)).as("n_vecs"))
@@ -1207,31 +1234,28 @@ object SimilarityOps {
   private def ivfCandFrames(embeddings: DataFrame, queryPred: Column,
       nCentroids: Int, nProbe: Int,
       centroids: Option[DataFrame]): (DataFrame, DataFrame) = {
-    // lazy: with caller-trained centroids the sizing count never runs
-    lazy val kCent = resolveK(embeddings, nCentroids)
     // both sides screened for defined cosines: a zero/NaN-norm corpus
     // row can neither probe nor match, and an unscreened one either
     // ANSI-crashes the divide (zero) or NaN-outranks every real
-    // neighbor (Spark sorts NaN greatest). Caller-supplied centroids
-    // get the same screen — a degenerate centroid must not own a cell.
-    val cents = centroids.getOrElse(
-      embeddings.filter(col("vec_id") < kCent)
-        .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-          norm(col("embedding")).as("c_nrm")))
-      .filter(definedNrm(col("c_nrm")))
-
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
-
+    // neighbor (Spark sorts NaN greatest); with caller-trained
+    // centroids the sizing count never runs
+    val (cents, vecs) = firstKCells(embeddings,
+      resolveK(embeddings, nCentroids), centroids)
     val assign = assignBest(vecs, cents,
       struct(col("embedding").as("n_emb"), col("nrm").as("n_nrm"), col("cid")))
       .select(col("vec_id").as("n_id"), col("best.n_emb").as("n_emb"),
         col("best.n_nrm").as("n_nrm"), col("best.cid").as("cid"))
+    (assign, probeCells(vecs, cents, queryPred, nProbe))
+  }
 
+  /** Per query, its nProbe best cells by (c_sim DESC, cid ASC):
+    * (q_id, q_emb, q_nrm, cid) — the probe step of [[ivfTopK]] and
+    * [[filteredTopK]]. */
+  private def probeCells(vecs: DataFrame, cents: DataFrame,
+      queryPred: Column, nProbe: Int): DataFrame = {
     val wProbe = Window.partitionBy("q_id")
       .orderBy(col("c_sim").desc, col("cid").asc)
-    val probes = vecs.filter(queryPred)
+    vecs.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
       .join(broadcast(cents), lit(true))
@@ -1239,7 +1263,6 @@ object SimilarityOps {
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= nProbe)
       .select(col("q_id"), col("q_emb"), col("q_nrm"), col("cid"))
-    (assign, probes)
   }
 
   /** One measured (nCentroids, nProbe) configuration: micro-averaged
@@ -1274,12 +1297,9 @@ object SimilarityOps {
       grid: Seq[(Int, Int)] = DefaultIvfGrid):
       (Option[IvfMeasurement], Seq[IvfMeasurement]) = {
     val measured = grid.map { case (kc, p) =>
-      val rec = ivfRecall(embeddings, queryPred, k, kc, p)
-        .agg(sum("n_hit").as("h"), sum("n_exact").as("e")).collect()(0)
-      val recallPpm = rec.getLong(0) * 1000000L / math.max(rec.getLong(1), 1L)
+      val recallPpm = microPpm(ivfRecall(embeddings, queryPred, k, kc, p))
       val (assign, probes) = ivfCandFrames(embeddings, queryPred, kc, p, None)
-      val rows = probes.join(assign, Seq("cid"))
-        .filter(col("q_id") =!= col("n_id")).count()
+      val rows = cellCands(probes, assign).count()
       IvfMeasurement(kc, p, recallPpm, rows)
     }
     val sloPpm = math.round(recallSlo * 1000000L)
@@ -1375,14 +1395,7 @@ object SimilarityOps {
   def semDedup(embeddings: DataFrame, tau: Double = SemTau,
       nCentroids: Int = AutoCentroids,
       cellCap: Int = SemCellCap): DataFrame = {
-    val kCent = resolveK(embeddings, nCentroids)
-    val cents = embeddings.filter(col("vec_id") < kCent)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, resolveK(embeddings, nCentroids))
     // ONE materialized frame (lazy checkpoint) feeds every consumer —
     // the senior side, the junior side, the drop probe, and the final
     // keep join all read the ranked assignment
@@ -1450,14 +1463,7 @@ object SimilarityOps {
       auditTarget: Int = NdAuditTarget): DataFrame = {
     val mod = math.max(1L, embeddings.count() / auditTarget)
     val sub = embeddings.filter(col("vec_id") % mod === 0)
-    val kCent = resolveK(sub, nCentroids)
-    val cents = sub.filter(col("vec_id") < kCent)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = sub.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(sub, resolveK(sub, nCentroids))
     val assign = assignBest(vecs, cents,
       struct(col("embedding").as("emb"), col("nrm").as("nrm"), col("cid")))
       .select(col("vec_id"), col("best.emb").as("emb"),
@@ -1512,14 +1518,7 @@ object SimilarityOps {
     * stage at all, strictly cheaper than semDedup. */
   def clusterCap(embeddings: DataFrame, cap: Int = ClusterCapN,
       nCentroids: Int = AutoCentroids): DataFrame = {
-    val kCent = resolveK(embeddings, nCentroids)
-    val cents = embeddings.filter(col("vec_id") < kCent)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, resolveK(embeddings, nCentroids))
     val assign = assignBest(vecs, cents, col("cid"))
       .select(col("vec_id"), col("best").as("cid"))
     val w = Window.partitionBy("cid").orderBy(col("h").asc, col("vec_id").asc)
@@ -1626,14 +1625,7 @@ object SimilarityOps {
     * and [[hardNegatives]]. */
   private def multiProbeAssign(embeddings: DataFrame, nCentroids: Int,
       nProbes: Int): (DataFrame, DataFrame) = {
-    val kCent = resolveK(embeddings, nCentroids)
-    val cents = embeddings.filter(col("vec_id") < kCent)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
+    val (cents, vecs) = firstKCells(embeddings, resolveK(embeddings, nCentroids))
     // top-P cells via the map-side partial top-k aggregator, not a
     // row_number window: the agg shuffles ~1 row per vector (partials
     // combine before the exchange), where the window would sort-shuffle
@@ -1649,24 +1641,6 @@ object SimilarityOps {
     (vecs, assign)
   }
 
-  /** Cluster-scoped kNN-graph construction — the candidate-generation
-    * backbone of graph-based curation (agglomerative dedup clusters,
-    * connectivity-based diversity sampling, label propagation): every
-    * vector gets edges to its k most-cosine-similar CANDIDATE
-    * neighbors, where candidates share at least one of the vector's
-    * top-`nProbes` coarse cells.
-    *
-    * Scale shape: multi-probe assignment is the [[ivfTopK]] probe
-    * idiom (broadcast K centroids + per-vector top-P window);
-    * candidates come from an equi-join keyed on the cell id —
-    * Σ(P·|cell|)² work, never all-pairs — and the per-node top-k is a
-    * keyed window over candidates only. Multi-assignment (P=2) is the
-    * standard boundary-recall fix: a pair straddling two cells is
-    * found iff EITHER endpoint probes the other's cell. Deterministic
-    * end to end (first-K centroids, (sim,−cid) probe tie-break,
-    * (sim DESC, dst ASC) edge tie-break), so DuckDB replays the whole
-    * build. Zero/NaN-norm vectors neither probe nor match
-    * ([[definedNrm]]). */
   /** Per-cell candidate retention shared by [[knnGraph]] and
     * [[hardNegatives]] (see [[KnnCellCap]]): rank each cell's members
     * in the cross-engine md5 order, materialize ONCE (lazy
@@ -1691,16 +1665,42 @@ object SimilarityOps {
     ranked
   }
 
+  /** Distinct (a, b) candidate pairs sharing a cell: each `srcs`
+    * membership against the cell's first `cellCap` ranked members,
+    * self-pairs excluded — the candidate join of [[knnGraph]] and
+    * [[hardNegatives]]. */
+  private def cellPairs(srcs: DataFrame, ranked: DataFrame, cellCap: Int,
+      a: String, b: String): DataFrame =
+    srcs.select(col("cid"), col("vec_id").as(a))
+      .join(ranked.filter(col("mrn") <= cellCap)
+          .select(col("cid").as("cid2"), col("vec_id").as(b)),
+        col("cid") === col("cid2") && col(a) =!= col(b))
+      .select(a, b).distinct()
+
+  /** Cluster-scoped kNN-graph construction — the candidate-generation
+    * backbone of graph-based curation (agglomerative dedup clusters,
+    * connectivity-based diversity sampling, label propagation): every
+    * vector gets edges to its k most-cosine-similar CANDIDATE
+    * neighbors, where candidates share at least one of the vector's
+    * top-`nProbes` coarse cells.
+    *
+    * Scale shape: multi-probe assignment is the [[ivfTopK]] probe
+    * idiom (broadcast K centroids + per-vector top-P window);
+    * candidates come from an equi-join keyed on the cell id —
+    * Σ(P·|cell|)² work, never all-pairs — and the per-node top-k is a
+    * keyed window over candidates only. Multi-assignment (P=2) is the
+    * standard boundary-recall fix: a pair straddling two cells is
+    * found iff EITHER endpoint probes the other's cell. Deterministic
+    * end to end (first-K centroids, (sim,−cid) probe tie-break,
+    * (sim DESC, dst ASC) edge tie-break), so DuckDB replays the whole
+    * build. Zero/NaN-norm vectors neither probe nor match
+    * ([[definedNrm]]). */
   def knnGraph(embeddings: DataFrame, k: Int = KnnK,
       nCentroids: Int = AutoCentroids, nProbes: Int = KnnProbes,
       cellCap: Int = KnnCellCap): DataFrame = {
     val (vecs, assign) = multiProbeAssign(embeddings, nCentroids, nProbes)
     val ranked = cappedCellMembers(assign, cellCap, "knnGraph")
-    val cand = ranked.select(col("cid"), col("vec_id").as("src"))
-      .join(ranked.filter(col("mrn") <= cellCap)
-          .select(col("cid").as("cid2"), col("vec_id").as("dst")),
-        col("cid") === col("cid2") && col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
+    val cand = cellPairs(ranked, ranked, cellCap, "src", "dst")
     val wRank = Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)
     cand
       .join(vecs.select(col("vec_id").as("src"), col("embedding").as("e1"),
@@ -1784,52 +1784,66 @@ object SimilarityOps {
     val edges = knnGraph(embeddings, KnnK, kCent, KnnProbes)
       .select(col("src"), col("dst"))
       .localCheckpoint(eager = false)
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
-    val queries = vecs.filter(queryPred)
+    val g = new GraphSearch(embeddings, queryPred)
+    val seeds = g.narrow(g.nodeVecs.filter(col("node") < kCent)
+      .select(col("node")).crossJoin(g.queries.select("q_id")), seedK)
+    val visited = g.beamHops(seeds, seeds, edges, hops, beam)
+    g.rankTopK(visited.filter(col("node") =!= col("q_id")).distinct(), k)
+  }
+
+  /** The cosine beam-search core of [[graphTopK]] and
+    * [[graphLayeredSearch]]: the screened query batch and node vectors,
+    * the (q_id, node) frontier scorer, per-query top-n narrowing, the
+    * unrolled hop loop and the final top-k gather. */
+  private final class GraphSearch(embeddings: DataFrame, queryPred: Column) {
+    private val vecs = screenedVecs(embeddings)
+    val queries: DataFrame = vecs.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
-    val nodeVecs = vecs.select(col("vec_id").as("node"),
+    val nodeVecs: DataFrame = vecs.select(col("vec_id").as("node"),
       col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    // score a (q_id, node) frontier: node embeddings via one corpus
-    // equi-join (tiny probe side → broadcast), query vectors via the
-    // bounded-batch join
+    private val wBeam = Window.partitionBy("q_id")
+      .orderBy(col("sim").desc, col("node").asc)
+
+    /** Score a (q_id, node) frontier: node embeddings via one corpus
+      * equi-join (tiny probe side → broadcast), query vectors via the
+      * bounded-batch join. */
     def scored(frontier: DataFrame): DataFrame = frontier
       .join(nodeVecs, "node")
       .join(queries, "q_id")
       .withColumn("sim",
         dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
       .select(col("q_id"), col("node"), col("sim"))
-    val wBeam = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("node").asc)
-    val seeds = scored(nodeVecs.filter(col("node") < kCent)
-        .select(col("node")).crossJoin(queries.select("q_id")))
+
+    /** The per-query top-`n` of a frontier, lazily checkpointed (it
+      * feeds the next expansion and the visited set). */
+    def narrow(frontier: DataFrame, n: Int): DataFrame = scored(frontier)
       .withColumn("rn", row_number().over(wBeam))
-      .filter(col("rn") <= seedK)
+      .filter(col("rn") <= n)
       .select("q_id", "node")
       .localCheckpoint(eager = false)
-    // hop loop: expand the frontier along its out-edges; every hop's
-    // nodes join the visited set; between hops the frontier narrows to
-    // the per-query top-`beam` of the NEW nodes (the unrolled beam
-    // search the oracle replays hop for hop)
-    var frontier = seeds
-    var visited = seeds
-    for (h <- 1 to hops) {
-      val hop = frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("q_id"), col("dst").as("node")).distinct()
-        .localCheckpoint(eager = false)
-      visited = visited.unionByName(hop)
-      frontier = if (h < hops) scored(hop)
-        .withColumn("rn", row_number().over(wBeam))
-        .filter(col("rn") <= beam)
-        .select("q_id", "node")
-        .localCheckpoint(eager = false)
-      else hop
+
+    /** Hop loop: expand the frontier along its out-edges; every hop's
+      * nodes join the visited set; between hops the frontier narrows
+      * to the per-query top-`beam` of the NEW nodes (the unrolled beam
+      * search the oracle replays hop for hop). Returns `visited` plus
+      * every hop. */
+    def beamHops(start: DataFrame, visited0: DataFrame, edges: DataFrame,
+        hops: Int, beam: Int): DataFrame = {
+      var frontier = start
+      var visited = visited0
+      for (h <- 1 to hops) {
+        val hop = frontier.join(edges, frontier("node") === edges("src"))
+          .select(col("q_id"), col("dst").as("node")).distinct()
+          .localCheckpoint(eager = false)
+        visited = visited.unionByName(hop)
+        frontier = if (h < hops) narrow(hop, beam) else hop
+      }
+      visited
     }
-    val gathered = visited
-      .filter(col("node") =!= col("q_id")).distinct()
-    scored(gathered)
+
+    /** Exact cosine top-k over the gathered (q_id, node) set. */
+    def rankTopK(gathered: DataFrame, k: Int): DataFrame = scored(gathered)
       .withColumn("rank", row_number().over(wBeam))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("node").as("n_id"),
@@ -1843,21 +1857,10 @@ object SimilarityOps {
     * instead of re-running the in-plan build+search. */
   def graphRecall(embeddings: DataFrame, queryPred: Column,
       k: Int = 10, beam: Int = GraphBeam, hops: Int = GraphHops,
-      served: Option[DataFrame] = None): DataFrame = {
-    val exact = bruteForceTopK(embeddings, queryPred, k)
-      .select(col("q_id"), col("n_id"))
-    val approx = served
-      .getOrElse(graphTopK(embeddings, queryPred, k, beam = beam, hops = hops))
-      .select(col("q_id").as("q2"), col("n_id").as("n2"))
-    val hits = exact
-      .join(approx, col("q_id") === col("q2") && col("n_id") === col("n2"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
-  }
+      served: Option[DataFrame] = None): DataFrame =
+    recallAudit(
+      bruteForceTopK(embeddings, queryPred, k).select(col("q_id"), col("n_id")),
+      served.getOrElse(graphTopK(embeddings, queryPred, k, beam = beam, hops = hops)))
 
   // ------------------------------------------ HNSW-style layer ladder
 
@@ -1993,22 +1996,7 @@ object SimilarityOps {
       l -> mirroredEdges(buildEdges(members))
         .localCheckpoint(eager = false)
     }.toMap
-    val vecs = embeddings.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"))
-      .filter(definedNrm(col("nrm")))
-    val queries = vecs.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val nodeVecs = vecs.select(col("vec_id").as("node"),
-      col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
-    def scored(frontier: DataFrame): DataFrame = frontier
-      .join(nodeVecs, "node")
-      .join(queries, "q_id")
-      .withColumn("sim",
-        dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-      .select(col("q_id"), col("node"), col("sim"))
-    val wBeam = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("node").asc)
+    val g = new GraphSearch(embeddings, queryPred)
     // entry: ALL top-layer members (the HNSW convention — the search
     // must enter ON the top layer for the first expansion to have
     // out-edges; membership nests geometrically, so carried nodes
@@ -2019,16 +2007,12 @@ object SimilarityOps {
     // bounded by the depth knob: at 100 TB you add layers rather than
     // let |top| grow, exactly like production HNSW keeps its apex
     // near-singleton.
-    val entry = nodeVecs
+    val entry = g.nodeVecs
       .filter(layerMemberPred(layers, col("node"))
         || col("node") < LayerEntryK)
-      .select(col("node")).crossJoin(queries.select("q_id"))
+      .select(col("node")).crossJoin(g.queries.select("q_id"))
       .select(col("q_id"), col("node"))
-    var carry = scored(entry)
-      .withColumn("rn", row_number().over(wBeam))
-      .filter(col("rn") <= seedK)
-      .select("q_id", "node")
-      .localCheckpoint(eager = false)
+    var carry = g.narrow(entry, seedK)
     var visited = entry
     // greedy descent ℓ = layers..1: expand the carried candidates
     // along the layer's edges, keep the per-query top-seedK of
@@ -2047,36 +2031,13 @@ object SimilarityOps {
       // seedK candidates, layer 0 explores from beam-many
       val keep = if (l == 1 && s == layerHops) math.max(seedK, beam)
         else seedK
-      carry = scored(cand)
-        .withColumn("rn", row_number().over(wBeam))
-        .filter(col("rn") <= keep)
-        .select("q_id", "node")
-        .localCheckpoint(eager = false)
+      carry = g.narrow(cand, keep)
     }
     // layer 0: the committed hop/beam loop, seeded by the descent
-    val e0 = layerEdges(0)
-    var frontier = carry
-    for (h <- 1 to hops) {
-      val hop = frontier.join(e0, frontier("node") === e0("src"))
-        .select(col("q_id"), col("dst").as("node")).distinct()
-        .localCheckpoint(eager = false)
-      visited = visited.unionByName(hop)
-      frontier = if (h < hops) scored(hop)
-        .withColumn("rn", row_number().over(wBeam))
-        .filter(col("rn") <= beam)
-        .select("q_id", "node")
-        .localCheckpoint(eager = false)
-      else hop
-    }
-    val gathered = visited
+    val gathered = g.beamHops(carry, visited, layerEdges(0), hops, beam)
       .filter(col("node") =!= col("q_id")).distinct()
       .localCheckpoint(eager = false)
-    val topk = scored(gathered)
-      .withColumn("rank", row_number().over(wBeam))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("node").as("n_id"),
-        col("rank").cast("long").as("rank"), round(col("sim"), 6).as("sim"))
-    (topk, gathered)
+    (g.rankTopK(gathered, k), gathered)
   }
 
   def graphLayeredTopK(embeddings: DataFrame, queryPred: Column,
@@ -2115,12 +2076,8 @@ object SimilarityOps {
     // per-cell candidate cap — [[KnnCellCap]]'s discipline on the
     // mining join (same md5 retention order, DuckDB-replayed)
     val ranked = cappedCellMembers(assign, cellCap, "hardNegatives")
-    val cand = ranked.filter(anchorPred)
-      .select(col("cid"), col("vec_id").as("anchor"))
-      .join(ranked.filter(col("mrn") <= cellCap)
-          .select(col("cid").as("cid2"), col("vec_id").as("other")),
-        col("cid") === col("cid2") && col("anchor") =!= col("other"))
-      .select("anchor", "other").distinct()
+    val cand = cellPairs(ranked.filter(anchorPred), ranked, cellCap,
+      "anchor", "other")
     val scored = cand
       .join(vecs.select(col("vec_id").as("anchor"), col("embedding").as("e1"),
         col("nrm").as("nrm1"), col("label").as("l1")), "anchor")
@@ -2258,32 +2215,15 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding"))
     val encoded = pqEncode(embeddings, d0, nSubs, nCodes)
       .select(col("vec_id").as("n_id"), col("codes"), col("fcb"))
-    val q = corpus.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val q = rawQueries(corpus, queryPred)
     val adc = encoded.join(broadcast(q), col("q_id") =!= col("n_id"))
       // native fused ADC kernel (codegen'd); bit-identical to
       // [[pqAdcHof]] (same per-subspace fold grouping)
       .withColumn("dist", graft.functions.VectorFunctions
         .pq_adc(col("q_emb"), col("codes"), col("fcb"), nSubs, nCodes))
       .select(col("q_id"), col("n_id"), col("dist"))
-    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
-    val cand = adc
-      .groupBy("q_id")
-      .agg(short(col("n_id"), -col("dist")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
-    val wRank = Window.partitionBy("q_id").orderBy(col("dist").asc, col("n_id").asc)
-    // the shortlist (≤ |Q|·shortlist id pairs) is the PROVABLY small
-    // side — broadcast it so the rerank streams the corpus scan; the
-    // stats-driven pick would flip to broadcasting the corpus at test
-    // scale, which inverts at 100 TB
-    corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dist", sqdist(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("dist"), 6).as("dist"))
+    rerankTopK(rawCorpus(corpus), shortlistIds(adc, shortlist, -col("dist")), q,
+      k, "dist", sqdist(col("q_emb"), col("n_emb")), ascending = true)
   }
 
   /** Label-propagation parameters for the driver query (shared with
@@ -2326,19 +2266,10 @@ object SimilarityOps {
     // (two layers: the knnGraph BUILD stays adaptive — it wants AQE's
     // skew handling at scale — and only the fixed-shape layout pass
     // over the built edge RDD compiles non-adaptively)
-    val sess = embeddings.sparkSession
     val built = knnGraph(embeddings, k, nCentroids, nProbes)
       .select(col("src"), col("dst"))
       .localCheckpoint(eager = false)
-    val nEdges = built.count()
-    val parts = graft.ops.GraphOps.pinnedPartitions(sess, nEdges)
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val edges = try org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(
-      built
-        .repartition(parts, col("dst"))
-        .sortWithinPartitions("dst"))
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val (edges, parts) = GraphOps.pinnedLayout(built, "dst", built.count())
     var labeled = embeddings.filter(seedPred)
       .select(col("vec_id"), col("label").cast("long").as("pred_label"),
         lit(0L).as("round"))
@@ -2430,30 +2361,20 @@ object SimilarityOps {
       .select(col("q_id"), col("q_emb"), explode(col("top.n_id")).as("cid"))
     // ADC over probed cells only: broadcast the probe side, stream the
     // encoded corpus; codebook re-attached from its 1-row broadcast
-    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
-    val cand = enc.join(broadcast(probes), Seq("cid"))
+    val cand = shortlistIds(enc.join(broadcast(probes), Seq("cid"))
       .filter(col("q_id") =!= col("n_id"))
       .crossJoin(broadcast(cbRow))
       .withColumn("dist", graft.functions.VectorFunctions
-        .pq_adc(col("q_emb"), col("codes"), col("fcb"), nSubs, nCodes))
-      .groupBy("q_id")
-      .agg(short(col("n_id"), -col("dist")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
+        .pq_adc(col("q_emb"), col("codes"), col("fcb"), nSubs, nCodes)),
+      shortlist, -col("dist"))
     // exact-L2 rerank of the shortlist on full-precision vectors
     val q = corpus.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("xx").as("q_xx"))
-    val wRank = Window.partitionBy("q_id").orderBy(col("dist").asc, col("n_id").asc)
-    corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
-        col("xx").as("n_xx"))
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dist", col("q_xx") - lit(2.0) * dotF(col("q_emb"), col("n_emb"))
-        + col("n_xx"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("dist"), 6).as("dist"))
+    rerankTopK(corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
+        col("xx").as("n_xx")), cand, q, k, "dist",
+      col("q_xx") - lit(2.0) * dotF(col("q_emb"), col("n_emb")) + col("n_xx"),
+      ascending = true)
   }
 
   // ------------------------------------------------------------ queries
@@ -2517,14 +2438,8 @@ object SimilarityOps {
     * summaries (sum / min / max / L1) rather than the code list —
     * list columns can't cross the oracle compare, and the summaries
     * pin every code through exact integer identities. */
-  def quantizeInt8(embs: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    val withAmax = embs.withColumn("amax",
-      aggregate(col(vecCol), lit(0.0), (a, x) => greatest(a, abs(x.cast("double")))))
-    val codes = when(col("amax") > 0.0,
-      transform(col(vecCol), x =>
-        round(x.cast("double") / col("amax") * 127.0).cast("long")))
-      .otherwise(transform(col(vecCol), x => lit(0L)))
-    withAmax.withColumn("codes", codes)
+  def quantizeInt8(embs: DataFrame, vecCol: String = "embedding"): DataFrame =
+    withAmax(embs, vecCol).withColumn("codes", int8Codes(vecCol))
       .select(col("vec_id"),
         round(col("amax") * 1e6).cast("long").as("amax_u"),
         size(col("codes")).cast("long").as("n_dims"),
@@ -2532,7 +2447,19 @@ object SimilarityOps {
         array_min(col("codes")).as("code_min"),
         array_max(col("codes")).as("code_max"),
         aggregate(col("codes"), lit(0L), (a, c) => a + abs(c)).as("code_l1"))
-  }
+
+  /** `embs` plus its per-vector max |x_i| as column `amax`. */
+  private def withAmax(embs: DataFrame, vecCol: String): DataFrame =
+    embs.withColumn("amax",
+      aggregate(col(vecCol), lit(0.0), (a, x) => greatest(a, abs(x.cast("double")))))
+
+  /** The int8 codes round(x_i / amax · 127) of a [[withAmax]] row;
+    * all-zero when amax = 0. */
+  private def int8Codes(vecCol: String): Column =
+    when(col("amax") > 0.0,
+      transform(col(vecCol), x =>
+        round(x.cast("double") / col("amax") * 127.0).cast("long")))
+      .otherwise(transform(col(vecCol), x => lit(0L)))
 
   /** SQ8 SERVING — the scalar-quantized member of the quantized-ANN
     * family (PQ 8-byte codes, RQ 2-level additive, SQ8 = [[quantizeInt8]]'s
@@ -2558,14 +2485,9 @@ object SimilarityOps {
     * Nothing corpus-sized shuffles, nothing corpus-sized broadcasts. */
   def sqTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10,
       shortlist: Int = PqShortlist): DataFrame = {
-    val withAmax = embeddings.withColumn("amax",
-      aggregate(col("embedding"), lit(0.0), (a, x) => greatest(a, abs(x.cast("double")))))
-    val codes = withAmax.select(col("vec_id"),
+    val codes = withAmax(embeddings, "embedding").select(col("vec_id"),
       round(col("amax") * 1e6).cast("long").as("amax_u"),
-      when(col("amax") > 0.0,
-        transform(col("embedding"), x =>
-          round(x.cast("double") / col("amax") * 127.0).cast("long")))
-        .otherwise(transform(col("embedding"), x => lit(0L))).as("c"))
+      int8Codes("embedding").as("c"))
     val qCodes = codes.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("c").as("qc"))
     val score = aggregate(zip_with(col("qc"), col("c"), (a, b) => a * b),
@@ -2573,25 +2495,10 @@ object SimilarityOps {
     val adc = codes.select(col("vec_id").as("n_id"), col("c"), col("amax_u"))
       .join(broadcast(qCodes), col("q_id") =!= col("n_id"))
       .withColumn("score", score)
-    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
-    val cand = adc
-      .groupBy("q_id")
-      .agg(short(col("n_id"), col("score").cast("double")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
-    val corpus = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"))
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wRank = Window.partitionBy("q_id")
-      .orderBy(col("dotp").desc, col("n_id").asc)
-    corpus
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dotp", dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("dotp"), 6).as("dotp"))
+    rerankTopK(rawCorpus(embeddings),
+      shortlistIds(adc, shortlist, col("score").cast("double")),
+      rawQueries(embeddings, queryPred), k,
+      "dotp", dot(col("q_emb"), col("n_emb")), ascending = false)
   }
 
   /** RRF smoothing constant (the k=60 of Cormack et al. 2009). */
@@ -2904,16 +2811,8 @@ object SimilarityOps {
       newPred: Column = col("vec_id") % 8 === 7,
       nCentroids: Int = AutoCentroids): DataFrame = {
     val base = embeddings.filter(!newPred)
-    val kCent = resolveK(base, nCentroids)
-    val cents = base.filter(col("vec_id") < kCent)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_emb"),
-        norm(col("embedding")).as("c_nrm"))
-      .filter(definedNrm(col("c_nrm")))
-    val vb = base.select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm")).filter(definedNrm(col("nrm")))
-    val vn = embeddings.filter(newPred)
-      .select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm")).filter(definedNrm(col("nrm")))
+    val (cents, vb) = firstKCells(base, resolveK(base, nCentroids))
+    val vn = screenedVecs(embeddings.filter(newPred))
     val asgB = assignBest(vb, cents, col("cid"))
       .select(col("vec_id"), col("best").as("cid"))
     val asgN = assignBest(vn, cents,
@@ -2960,19 +2859,7 @@ object SimilarityOps {
     * localCheckpoint'd per round like the CC/label-prop family. */
   def mmrTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10,
       nCands: Int = MmrCands): DataFrame = {
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_nrm"))
-      .filter(definedNrm(col("q_nrm")))
-    val c = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"), norm(col("embedding")).as("n_nrm"))
-      .filter(definedNrm(col("n_nrm")))
-    val topc = udaf(new graft.functions.TopKSimAgg(nCands))
-    val cands = c.join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("sim", dot(col("q_emb"), col("n_emb")) / (col("q_nrm") * col("n_nrm")))
-      .groupBy("q_id")
-      .agg(topc(col("n_id"), col("sim")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
+    val cands = cosineTopN(embeddings, queryPred, nCands)
       .select(col("q_id"), col("col.n_id").as("n_id"),
         (col("pos") + 1).cast("long").as("rank"),
         round(col("col.sim") * 1e6).cast("long").as("simq_u"))
@@ -3017,12 +2904,9 @@ object SimilarityOps {
     * audits against ([[sqTopK]] ranks by raw dot, not cosine/L2). */
   private def dotTopK(embeddings: DataFrame, queryPred: Column,
       k: Int): DataFrame = {
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val n = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"))
     val w = Window.partitionBy("q_id").orderBy(col("dotp").desc, col("n_id").asc)
-    q.join(n, col("q_id") =!= col("n_id"))
+    rawQueries(embeddings, queryPred)
+      .join(rawCorpus(embeddings), col("q_id") =!= col("n_id"))
       .withColumn("dotp", dot(col("q_emb"), col("n_emb")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -3036,19 +2920,9 @@ object SimilarityOps {
     * serving cost. Exhaustive shortlist ⇒ recall 1.0 exactly
     * (SqTopKSpec). */
   def sqRecall(embeddings: DataFrame, queryPred: Column, k: Int = 10,
-      shortlist: Int = PqShortlist): DataFrame = {
-    val exact = dotTopK(embeddings, queryPred, k)
-    val approx = sqTopK(embeddings, queryPred, k, shortlist)
-      .select(col("q_id").as("q2"), col("n_id").as("n2"))
-    val hits = exact
-      .join(approx, col("q_id") === col("q2") && col("n_id") === col("n2"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
-  }
+      shortlist: Int = PqShortlist): DataFrame =
+    recallAudit(dotTopK(embeddings, queryPred, k),
+      sqTopK(embeddings, queryPred, k, shortlist))
 
   /** Sign-bit word width for [[bqTopK]] — 32 bits per packed word
     * (not 64: a 63-bit shift overflows DuckDB's signed BIGINT, and
@@ -3092,27 +2966,11 @@ object SimilarityOps {
         expr(s"bit_count(element_at(qw, ${i + 1}) ^ element_at(cw, ${i + 1}))")
           .cast("long"))
       .reduce(_ + _)
-    val short = udaf(new graft.functions.TopKSimAgg(shortlist))
-    val cand = codes.select(col("vec_id").as("n_id"), col("cw"))
+    val cand = shortlistIds(codes.select(col("vec_id").as("n_id"), col("cw"))
       .join(broadcast(qCodes), col("q_id") =!= col("n_id"))
-      .withColumn("ham", ham)
-      .groupBy("q_id")
-      .agg(short(col("n_id"), -col("ham").cast("double")).as("top"))
-      .select(col("q_id"), explode(col("top.n_id")).as("n_id"))
-    val corpus = embeddings.select(col("vec_id").as("n_id"),
-      col("embedding").as("n_emb"))
-    val q = embeddings.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wRank = Window.partitionBy("q_id")
-      .orderBy(col("dotp").desc, col("n_id").asc)
-    corpus
-      .join(broadcast(cand), "n_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("dotp", dot(col("q_emb"), col("n_emb")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        round(col("dotp"), 6).as("dotp"))
+      .withColumn("ham", ham), shortlist, -col("ham").cast("double"))
+    rerankTopK(rawCorpus(embeddings), cand, rawQueries(embeddings, queryPred), k,
+      "dotp", dot(col("q_emb"), col("n_emb")), ascending = false)
   }
 
   /** Binary-quantization recall audit — the fifth member of the
@@ -3120,19 +2978,9 @@ object SimilarityOps {
     * vs the exhaustive dot ranking, per query in exact ppm, on the
     * bounded query batch only. */
   def bqRecall(embeddings: DataFrame, queryPred: Column, k: Int = 10,
-      shortlist: Int = PqShortlist): DataFrame = {
-    val exact = dotTopK(embeddings, queryPred, k)
-    val approx = bqTopK(embeddings, queryPred, k, shortlist)
-      .select(col("q_id").as("q2"), col("n_id").as("n2"))
-    val hits = exact
-      .join(approx, col("q_id") === col("q2") && col("n_id") === col("n2"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("q_id"), "left")
-      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-      .withColumn("recall_ppm",
-        expr("(n_hit * 1000000) div greatest(n_exact, 1)"))
-  }
+      shortlist: Int = PqShortlist): DataFrame =
+    recallAudit(dotTopK(embeddings, queryPred, k),
+      bqTopK(embeddings, queryPred, k, shortlist))
 
   /** One measured shortlist configuration for a quantized serving
     * rung: micro-averaged recall in exact ppm and the rerank cost in
@@ -3165,10 +3013,8 @@ object SimilarityOps {
       (Option[ShortlistMeasurement], Seq[ShortlistMeasurement]) = {
     val nQ = embeddings.filter(queryPred).count()
     val measured = grid.map { sl =>
-      val rec = audit(embeddings, queryPred, k, sl)
-        .agg(sum("n_hit").as("h"), sum("n_exact").as("e")).collect()(0)
-      val recallPpm = rec.getLong(0) * 1000000L / math.max(rec.getLong(1), 1L)
-      ShortlistMeasurement(sl, recallPpm, nQ * sl)
+      ShortlistMeasurement(sl, microPpm(audit(embeddings, queryPred, k, sl)),
+        nQ * sl)
     }
     val sloPpm = math.round(recallSlo * 1000000L)
     val chosen = measured.filter(_.recallPpm >= sloPpm)
@@ -3202,10 +3048,8 @@ object SimilarityOps {
       (Option[GraphBeamMeasurement], Seq[GraphBeamMeasurement]) = {
     val nQ = embeddings.filter(queryPred).count()
     val measured = grid.map { b =>
-      val rec = graphRecall(embeddings, queryPred, k, beam = b, hops = hops)
-        .agg(sum("n_hit").as("h"), sum("n_exact").as("e")).collect()(0)
-      val recallPpm = rec.getLong(0) * 1000000L / math.max(rec.getLong(1), 1L)
-      GraphBeamMeasurement(b, recallPpm,
+      GraphBeamMeasurement(b,
+        microPpm(graphRecall(embeddings, queryPred, k, beam = b, hops = hops)),
         nQ * (GraphSeeds * (1L + KnnK) +
           math.max(hops - 1, 0).toLong * b.toLong * KnnK))
     }
@@ -3239,17 +3083,9 @@ object SimilarityOps {
     val n = embeddings.count()
     val kCent = autoCentroids(n)
     val nLayers = autoLayers(n)
-    def ppmOf(audit: DataFrame): Long = {
-      // coalesce: an empty audit frame (queryPred matches no vectors)
-      // sums to NULL, and getLong on it would NPE (r15 ADVICE)
-      val r = audit.agg(coalesce(sum("n_hit"), lit(0L)).as("h"),
-          coalesce(sum("n_exact"), lit(0L)).as("e"))
-        .collect()(0)
-      r.getLong(0) * 1000000L / math.max(r.getLong(1), 1L)
-    }
     val flat = grid.map { b =>
       RungMeasurement("flat", b,
-        ppmOf(graphRecall(embeddings, queryPred, k, beam = b, hops = hops)),
+        microPpm(graphRecall(embeddings, queryPred, k, beam = b, hops = hops)),
         nQ * (kCent + GraphSeeds * (1L + KnnK) +
           math.max(hops - 1, 0).toLong * b * KnnK))
     }
@@ -3257,7 +3093,7 @@ object SimilarityOps {
       val (topk, visited) = graphLayeredSearch(embeddings, queryPred, k,
         b, GraphSeeds, hops, nLayers)
       RungMeasurement("layered", b,
-        ppmOf(graphRecall(embeddings, queryPred, k, served = Some(topk))),
+        microPpm(graphRecall(embeddings, queryPred, k, served = Some(topk))),
         visited.count())
     }
     val all = flat ++ layered

@@ -90,6 +90,10 @@ class BqTopKSpec extends AnyFunSuite {
     val (none, _) = SimilarityOps.tuneShortlist(emb, pred,
       recallSlo = 1.1, grid = Seq(10, 50))
     assert(none.isEmpty, "an unmeetable SLO must return None")
+    val (noQueries, empty) = SimilarityOps.tuneShortlist(emb, lit(false),
+      recallSlo = 0.7, grid = Seq(10, 50))
+    assert(noQueries.isEmpty && empty.size == 2 && empty.forall(_.recallPpm == 0L),
+      s"an empty query set audits nothing: 0 ppm, not a throw ($empty)")
   }
 
   test("recall@10 at the default shortlist, measured") {

@@ -1,6 +1,8 @@
 package graft
 
+import scala.util.Try
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape audit: the physical plans the engine ships are asserted,
@@ -37,6 +39,15 @@ class PlanAuditSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
   }
+
+  // The two suite-wide sweeps audit the same plans: each query's
+  // QueryExecution is built once, on first use, and both read its
+  // (memoized) executedPlan / sparkPlan instead of re-planning all
+  // queries a second time.
+  private lazy val sweep: Seq[(String, Try[QueryExecution])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, sf).queryExecution)
+    }
 
   test("q1_pricing: column pruning reaches the lineitem scan") {
     val p = plan("q1_pricing")
@@ -317,10 +328,10 @@ class PlanAuditSpec extends AnyFunSuite {
     val allowCross = Set("pipe_totals", "pipe_effective_length",
       "agg_heavy_hitters", "agg_kmv_ops")
     val failures = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val p = try fn(spark, sf).queryExecution.executedPlan.toString catch {
-        case e: Throwable => failures += s"$name: plan failed: ${e.getMessage}"; ""
-      }
+    sweep.foreach { case (name, qe) =>
+      val p = qe.map(_.executedPlan.toString).recover {
+        case e => failures += s"$name: plan failed: ${e.getMessage}"; ""
+      }.get
       if (!allowCross(name) && p.contains("CartesianProduct"))
         failures += s"$name: CartesianProduct"
       if (!(allowNested(name) || allowCross(name)) && p.contains("BroadcastNestedLoopJoin"))
@@ -344,10 +355,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // the bound in the plan — so an EMPTY partitionSpec here can only
     // be an accidental corpus-sized global window
     val failures = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val bad = try fn(spark, sf).queryExecution.sparkPlan.collect {
+    sweep.foreach { case (name, qe) =>
+      val bad = qe.map(_.sparkPlan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w.nodeName
-      } catch { case _: Throwable => Nil } // plan failures caught above
+      }).getOrElse(Nil) // plan failures caught above
       if (bad.nonEmpty)
         failures += s"$name: ${bad.size} unpartitioned Window node(s)"
     }

@@ -133,6 +133,10 @@ class SimilarityOpsSpec extends AnyFunSuite {
     val (none, all) = SimilarityOps.tuneGraph(emb, pred, recallSlo = 1.01)
     assert(none.isEmpty && all.length == SimilarityOps.DefaultBeamGrid.length,
       "an impossible SLO returns None, never silent best-effort")
+    val (noQueries, empty) = SimilarityOps.tuneGraph(emb, lit(false),
+      recallSlo = 0.01, grid = Seq(2, 4))
+    assert(noQueries.isEmpty && empty.size == 2 && empty.forall(_.recallPpm == 0L),
+      s"an empty query set audits nothing: 0 ppm, not a throw ($empty)")
   }
 
   test("graphRecall: per-query audit rows recompose to the set-level recall " +

@@ -69,5 +69,10 @@ class TuneIvfSpec extends AnyFunSuite {
       recallSlo = 1.1, grid = Seq((16, 4), (32, 8)))
     assert(chosen.isEmpty)
     assert(all.size == 2)
+    // an empty query set audits nothing: 0 ppm everywhere, not a throw
+    val (none, empty) = SimilarityOps.tuneIvf(emb, lit(false), k = 10,
+      recallSlo = 0.8, grid = Seq((16, 4), (32, 8)))
+    assert(none.isEmpty)
+    assert(empty.size == 2 && empty.forall(_.recallPpm == 0L), s"$empty")
   }
 }
