@@ -24,6 +24,12 @@ import graft.sources.KmlSource
   * bounded (grid cells, pipeline pairs); nothing is collected to the
   * driver except the final summary row. Skewed corridors (many segments
   * in one cell) are split by AQE's skew-join handling.
+  *
+  * Each frame of an analysis is computed once: [[analyze]] persists the
+  * parsed features, every intermediate and the two export tables, so the
+  * summary and all sinks read one copy (the export tables fill on the
+  * first sink that reads them). The frames stay cached until the caller
+  * frees them with [[AnalysisResult.release]].
   */
 class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializable {
   val p: AnalyzerParams = params.clamped
@@ -245,14 +251,22 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
     * clamps. Ingestion runs the distributed path ([[KmlSource.readMany]]
     * + [[KmlSource.splitMany]]): files parse on executors and arrival-
     * order ids come from per-file windows + offset join — no driver
-    * collect of features. */
+    * collect of features. The caller releases the result. */
   def analyze(spark: SparkSession, path: String): AnalysisResult = {
     import spark.implicits._
-    val (pipelines, placemarks) = KmlSource.splitMany(KmlSource.readMany(spark, path))
-    val nPipes = pipelines.count()
-    val nPms = placemarks.count()
-    if (nPipes == 0 && nPms == 0)
+    val features = KmlSource.readMany(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
+    val (splitPipelines, placemarks) = KmlSource.splitMany(features)
+    // lengths and segments both read the pipelines: number them once
+    val pipelines = splitPipelines.persist(StorageLevel.MEMORY_AND_DISK)
+    val counts = features.agg(
+      count(when(KmlSource.IsPipeline, 1)), count(when(!KmlSource.IsPipeline, 1))).first()
+    val nPipes = counts.getLong(0)
+    val nPms = counts.getLong(1)
+    if (nPipes == 0 && nPms == 0) {
+      features.unpersist()
+      pipelines.unpersist()
       throw new IllegalArgumentException("No valid features found in the file")
+    }
 
     val lengths = pipelineLengths(pipelines).persist(StorageLevel.MEMORY_AND_DISK)
     val totals = lengths.agg(
@@ -268,7 +282,8 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
       val (sections0, overlaps0) = enrichOutputs(lengths, sess0, bundledSections(sess0))
       return AnalysisResult(lengths, placemarks.toDF(), sections0, overlaps0,
         AnalysisSummary(nPipes, nPms, totalM, totalMi, 0, 0, 0, 0.0,
-          totalM, totalMi, 0.0, 0.0, 0.0))
+          totalM, totalMi, 0.0, 0.0, 0.0),
+        Seq(features, pipelines, lengths, sections0, overlaps0))
     }
 
     val segs = segments(pipelines).persist(StorageLevel.MEMORY_AND_DISK)
@@ -280,11 +295,9 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
 
     val nSegments = segs.count()
     val nPairGroups = pairs.select("p1", "p2").distinct().count()
-    val nSections = sections.count()
-    val totalBundledM = {
-      val r = sections.agg(sum(col("segment_count") * p.segmentM)).first()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
+    val bundled = sections.agg(count(lit(1)), sum(col("segment_count") * p.segmentM)).first()
+    val nSections = bundled.getLong(0)
+    val totalBundledM = if (bundled.isNullAt(1)) 0.0 else bundled.getDouble(1)
 
     val effRaw = effectiveLengthMeters(segs, pairs, lengths)
     val effM = math.max(0.0, math.min(totalM, effRaw)) // clamp, reference :876
@@ -294,28 +307,36 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
     AnalysisResult(lengths, placemarks.toDF(), sectionsOut, overlaps,
       AnalysisSummary(nPipes, nPms, totalM, totalMi, nSegments, nPairGroups,
         nSections, totalBundledM, effM, effM / Geodesic.SurveyMile,
-        savingsM, savingsM / Geodesic.SurveyMile, savingsPct))
+        savingsM, savingsM / Geodesic.SurveyMile, savingsPct),
+      Seq(features, pipelines, lengths, segs, pairs, sessionized, sections, sectionsOut,
+        overlaps))
   }
 
   /** Re-analysis (reference entry point C, reanalyze :1588-1655): the
     * SAME input re-run under new parameters. The reference re-invokes
     * analyze_complete on its cached current_file — a full recompute
     * with no incremental reuse — and this mirrors that contract; the
-    * persisted intermediates of THIS analyzer are not shared. */
+    * persisted intermediates of THIS analyzer are not shared. It never
+    * sees the previous result, so the caller releases that one. */
   def reanalyze(spark: SparkSession, path: String, newParams: AnalyzerParams): AnalysisResult =
     new Analyzer(newParams).analyze(spark, path)
 
   /** Names + corridor polygons on sections (reference bundled_sections
-    * shape, :718-745, sorted by length desc) and names on overlaps. */
+    * shape, :718-745, sorted by length desc, ties by pipeline pair and
+    * section so every sink lists them in one order) and names on
+    * overlaps. Both are persisted: they are the export tables every
+    * sink reads. */
   private def enrichOutputs(
       lengths: DataFrame, sessionized: DataFrame, sections: DataFrame): (DataFrame, DataFrame) = {
     val names = lengths.select(col("id"), col("Name"))
     val sectionsOut = sectionCorridors(sessionized, sections)
       .join(names.select(col("id").as("p1"), col("Name").as("pipeline_1")), Seq("p1"))
       .join(names.select(col("id").as("p2"), col("Name").as("pipeline_2")), Seq("p2"))
-      .orderBy(desc("bundled_length_miles"))
+      .orderBy(desc("bundled_length_miles"), asc("p1"), asc("p2"), asc("section"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val overlaps = pipelineOverlaps(sessionized, sections)
       .join(names.select(col("id").as("p"), col("Name").as("name")), Seq("p"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     (sectionsOut, overlaps)
   }
 
@@ -327,13 +348,23 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
 }
 
 /** Full analysis output: the reference's nested result dict (:885-897)
-  * as Datasets + a typed summary. */
+  * as Datasets + a typed summary.
+  *
+  * `cached` holds every frame the producing analysis persisted. The
+  * caller owns them: [[release]] frees them once the exports are
+  * written. A result built by hand caches nothing of its own. */
 final case class AnalysisResult(
     pipelines: DataFrame,
     placemarks: DataFrame,
     sections: DataFrame,
     overlaps: DataFrame,
-    summary: AnalysisSummary)
+    summary: AnalysisSummary,
+    cached: Seq[Dataset[_]] = Nil) {
+
+  /** Unpersists every frame in `cached`; the result's frames stay
+    * usable but recompute from their sources when read again. */
+  def release(): Unit = cached.foreach(_.unpersist())
+}
 
 object Analyzer {
   /** Faithful port of the reference's per-pipeline segmentation loop

@@ -50,7 +50,7 @@ object Sinks {
          |Survey Savings: ${s.savingsMiles}%.3f miles
          |Savings Percentage: ${s.savingsPercent}%.1f%%
          |""".stripMargin
-    Files.writeString(Paths.get(path), txt)
+    writeAtomically(path, txt)
   }
 
   /** Whole-result JSON export (reference json.dump of the result dict,
@@ -113,7 +113,7 @@ object Sinks {
          |    "angular_tolerance": ${params.clamped.angularTolDeg}
          |  }
          |}""".stripMargin
-    Files.writeString(Paths.get(path), json)
+    writeAtomically(path, json)
   }
 
   /** One section's corridor KML — polygon + center point, styled like
@@ -183,24 +183,34 @@ object Sinks {
          |  </Document>
          |</kml>
          |""".stripMargin
-    Files.writeString(Paths.get(path), kml)
+    writeAtomically(path, kml)
   }
 
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
   /** coalesce(1) + rename: deterministic single-file output for small
-    * results (the reference's export shape). */
+    * results (the reference's export shape). Spark writes into
+    * `<target>.tmp/` beside the target, so the part file moves into
+    * place atomically on the same filesystem. */
   private def singleFile(df: DataFrame, format: String, targetPath: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_sink_").toString
-    val dir = s"$tmp/out"
-    df.coalesce(1).write.option("header", "true").format(format).save(dir)
-    val part = Files.list(Paths.get(dir)).toArray.map(_.toString)
+    val tmp = Paths.get(s"$targetPath.tmp")
+    df.coalesce(1).write.mode("overwrite").option("header", "true").format(format)
+      .save(tmp.toString)
+    val part = Files.list(tmp).toArray.map(_.toString)
       .find(p => p.endsWith(s".$format"))
-      .getOrElse(throw new IllegalStateException(s"no part file in $dir"))
-    Files.move(Paths.get(part), Paths.get(targetPath), StandardCopyOption.REPLACE_EXISTING)
+      .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
+    Files.move(Paths.get(part), Paths.get(targetPath), StandardCopyOption.ATOMIC_MOVE)
     // best-effort temp cleanup
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
+    Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
       .forEach(p => { Files.deleteIfExists(p); () })
+  }
+
+  /** Writes `<path>.tmp` beside the target, then renames it into place:
+    * a reader never sees a partial side file. */
+  private def writeAtomically(path: String, text: String): Unit = {
+    val tmp = Paths.get(s"$path.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{PipelineRow, PlacemarkRow, RawFeature}
 
@@ -39,6 +39,10 @@ object KmlSource {
         col("geometry_type").as("geometryType"), col("coordinates"),
         col("attrs"))
 
+  /** The routing predicate of [[splitMany]]: true for a [[readMany]] row
+    * that becomes a pipeline, false for one that becomes a placemark. */
+  val IsPipeline: Column = col("geometryType") === "LineString"
+
   /** Distributed feature routing with the reference's arrival-order id
     * semantics, for [[readMany]] output: within each file, LineStrings
     * are numbered by scan position (`row_number` over the per-file
@@ -76,12 +80,12 @@ object KmlSource {
         .withColumn("gid", col("fid") + col("off"))
     }
 
-    val pipes = withGlobalIdx(features.filter(col("geometryType") === "LineString"))
+    val pipes = withGlobalIdx(features.filter(IsPipeline))
       .select(col("gid").cast("int").as("id"), col("objectid"), col("name"),
         col("coordinates"))
       .as[PipelineRow]
 
-    val pms = withGlobalIdx(features.filter(col("geometryType") =!= "LineString"))
+    val pms = withGlobalIdx(features.filter(!IsPipeline))
       .select(
         when(col("objectid") =!= "N/A", col("objectid"))
           .otherwise(concat(lit("PM_"), (col("gid") + 1).cast("string")))
