@@ -118,3 +118,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
   }
 }
+
+object GraftExtensions {
+
+  /** Registers `f` as the SQL function `name` in `spark` unless a
+    * function of that name exists there, which is never replaced: for
+    * typed aggregates the extension cannot inject. */
+  def registerIfAbsent(spark: org.apache.spark.sql.SparkSession, name: String,
+      f: org.apache.spark.sql.expressions.UserDefinedFunction): Unit = synchronized {
+    if (!spark.catalog.functionExists(name)) spark.udf.register(name, f)
+  }
+}

@@ -55,9 +55,10 @@ object Tables {
     * The NTZ generation is pinned to LTZ via an explicit read schema
     * (see [[t]]), so `ts` predicates still push down to parquet and no
     * session conf is mutated. The NANOS generation cannot even be
-    * schema-inferred without `legacy.parquet.nanosAsLong`, so only that
-    * legacy fallback sets the conf (none of the current testdata
-    * generations hit it). */
+    * schema-inferred unless the caller's session sets
+    * `spark.sql.legacy.parquet.nanosAsLong`; without it the read fails
+    * with an error naming the file and that conf (none of the current
+    * testdata generations hit it). */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val df =
@@ -65,8 +66,9 @@ object Tables {
       catch {
         case e: Exception
             if e.getMessage != null && e.getMessage.contains("NANOS") =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(path)
+          throw new IllegalStateException(s"$path stores ts as " +
+            "TIMESTAMP(NANOS); set spark.sql.legacy.parquet.nanosAsLong=true " +
+            "on the session to read it", e)
       }
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -113,13 +112,4 @@ object GeoFunctions {
 
   def st_geodesic_length(coords: Column): Column =
     toCol(GeodesicPolylineLength(toExpr(coords)))
-
-  /** SQL-surface registration: SELECT st_geodesic_distance(...) works. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("st_geodesic_distance", e => GeodesicDistance(e), "built-in")
-    reg.createOrReplaceTempFunction("st_azimuth", e => GeodesicAzimuth(e), "built-in")
-    reg.createOrReplaceTempFunction("bearing_diff", e => BearingDiff(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("st_geodesic_length", e => GeodesicPolylineLength(e.head), "built-in")
-  }
 }

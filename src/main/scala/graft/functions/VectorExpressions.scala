@@ -531,10 +531,12 @@ case class VecCosSim(left: Expression, right: Expression) extends BinaryExpressi
   * previously computed through an interpreted
   * `aggregate(zip_with(...))` chain (boxed per element, re-planned per
   * use site). Integer addition is exact and order-free, so this is
-  * bit-identical to the HOF fold; null if either side is null (the
-  * HOF's null semantics for a null array). */
+  * bit-identical to the HOF fold; null if either side is null or the
+  * lengths differ (the HOF's null semantics: zip_with pads the shorter
+  * array with nulls). */
 case class VecL2sqLong(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
@@ -549,7 +551,8 @@ case class VecL2sqLong(left: Expression, right: Expression) extends BinaryExpres
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (y.numElements() != n) return null
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -565,9 +568,10 @@ case class VecL2sqLong(left: Expression, right: Expression) extends BinaryExpres
       val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
+         |int $n = $x.numElements();
+         |${ev.isNull} = $y.numElements() != $n;
          |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
+         |for (int $i = 0; !${ev.isNull} && $i < $n; $i++) {
          |  long $d = $x.getLong($i) - $y.getLong($i);
          |  $acc += $d * $d;
          |}
@@ -585,22 +589,25 @@ case class VecL2sqLong(left: Expression, right: Expression) extends BinaryExpres
   * interpreted `aggregate(zip_with(...))` folds re-walked the vector
   * once per centroid through boxed lambdas. Iterating clusters in
   * ascending id with a strict `<` keeps the first minimum: exactly
-  * array_min's (dist ASC, cl ASC) struct order. */
+  * array_min's (dist ASC, cl ASC) struct order. Null when the input
+  * is null or its length is not the centroids' dimension. */
 case class VecArgminL2Fixed(child: Expression, cents: Seq[Seq[Long]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(cents.nonEmpty)
   private val flat: Array[Long] = cents.flatten.toArray
   private val dim: Int = cents.head.length
+  require(cents.forall(_.length == dim),
+    s"every centroid needs $dim dimensions, got ${cents.map(_.length).distinct}")
   override def dataType: DataType = StructType(Seq(
     StructField("dist", LongType, nullable = false),
     StructField("cl", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = true
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null
     val x = v.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), dim)
+    if (x.numElements() != dim) return null
     var bestD = Long.MaxValue
     var bestC = 0L
     var c = 0
@@ -608,7 +615,7 @@ case class VecArgminL2Fixed(child: Expression, cents: Seq[Seq[Long]])
       val off = c * dim
       var acc = 0L
       var i = 0
-      while (i < n) {
+      while (i < dim) {
         val d = x.getLong(i) - flat(off + i)
         acc += d * d
         i += 1
@@ -625,18 +632,20 @@ case class VecArgminL2Fixed(child: Expression, cents: Seq[Seq[Long]])
 /** vec_dot_const_long(x, w) → long: Σ xᵢ·wᵢ against a LITERAL int64
   * weight vector — the perceptron margin, previously an interpreted
   * `aggregate(zip_with(...))` per row per training round. Exact
-  * integer arithmetic, order-free ⇒ bit-identical. */
+  * integer arithmetic, order-free ⇒ bit-identical. Null when the input
+  * is null or its length differs from the weights'. */
 case class VecDotConstLong(child: Expression, w: Seq[Long])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   private val wa: Array[Long] = w.toArray
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = true
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) return null
     val x = v.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), wa.length)
+    val n = wa.length
+    if (x.numElements() != n) return null
     var acc = 0L
     var i = 0
     while (i < n) { acc += x.getLong(i) * wa(i); i += 1 }
@@ -707,10 +716,6 @@ object VectorFunctions {
     toCol(PlaneBandKeys(toExpr(v), weights, bitsPerBand))
   def cell_probe(v: Column, cents: Seq[(Long, Seq[Float])], nProbe: Int): Column =
     toCol(CellProbe(toExpr(v), cents, nProbe))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", e => VecDot(e(0), e(1)), "built-in")
 }
 
 /** mmr_greedy(cands, pairs) → array<struct<n_id:long, step:long>>:

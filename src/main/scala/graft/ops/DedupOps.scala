@@ -720,20 +720,17 @@ object DedupOps {
     * anti-join, which is exactly what the oracle recomputes. */
   def incrementalNovelPairs(events: DataFrame,
       cutTs: String = IncrCutTs): DataFrame = {
-    import graft.queries.Coverage.{bloomH, bloomMightContain, BloomBits, BloomJ}
+    import graft.queries.Coverage.{bloomH, bloomMightContain, bloomOr}
     val keyed = events
       .withColumn("item", get_json_object(col("props"), "$.k").cast("long"))
     val batch = keyed.filter(col("ts") >= lit(cutTs).cast("timestamp"))
     val history = keyed.filter(col("ts") < lit(cutTs).cast("timestamp"))
-    val spark = events.sparkSession
-    spark.udf.register("bloom_or",
-      udaf(new graft.functions.BloomAgg(BloomBits, BloomJ)))
     val batchKeys = batch.groupBy("user_id", "item")
       .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event_id"))
     val keyStr = concat_ws(":", col("user_id"), col("item"))
     val bloom = batchKeys
       .select(bloomH("ib1:", keyStr).as("h1"), bloomH("ib2:", keyStr).as("h2"))
-      .agg(expr("bloom_or(h1, h2)").as("bf"))
+      .agg(bloomOr(col("h1"), col("h2")).as("bf"))
     val histKeys = history
       .select(col("user_id"), col("item"))
       .withColumn("h1", bloomH("ib1:", keyStr))

@@ -263,21 +263,14 @@ object GraphOps {
 
   /** Pinned loop-invariant layout of `df` on `key`: repartitioned into
     * [[pinnedPartitions]]`(rows)` parts, sorted within partitions and
-    * checkpointed with AQE off for THIS compilation only, so the
-    * checkpoint's LogicalRDD carries the HashPartitioning + ordering
-    * and every round's join reuses it. Returns the layout and its
-    * partition count (the loop pins its other join side to the same
-    * count). Toggles the session's conf around the compilation — the
-    * one place that workaround lives. */
+    * checkpointed from a non-adaptive compilation, so the checkpoint's
+    * LogicalRDD carries the HashPartitioning + ordering and every
+    * round's join reuses it. Returns the layout and its partition
+    * count (the loop pins its other join side to the same count). */
   private[graft] def pinnedLayout(df: DataFrame, key: String,
       rows: Long): (DataFrame, Int) = {
-    val sess = df.sparkSession
-    val parts = pinnedPartitions(sess, rows)
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try (org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(
-        df.repartition(parts, col(key)).sortWithinPartitions(key)), parts)
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    val parts = pinnedPartitions(df.sparkSession, rows)
+    (org.apache.spark.sql.graft.Bridge.freshLocalCheckpoint(df, key, parts), parts)
   }
 
   def pageRankFixed(edges: DataFrame, iters: Int = 5): DataFrame = {
@@ -307,8 +300,8 @@ object GraphOps {
     // plan is compiled non-adaptively: under AQE the executed plan is
     // not finalized when LogicalRDD captures outputPartitioning /
     // outputOrdering, so both read Unknown and every round
-    // re-exchanged (measured — plan unchanged, 5 |E| exchanges). AQE
-    // is toggled off around THIS plan compilation only (a fixed-shape
+    // re-exchanged (measured — plan unchanged, 5 |E| exchanges). Only
+    // THIS plan compiles with AQE off ([[pinnedLayout]]; a fixed-shape
     // repartition+sort gains nothing from AQE); the loop itself still
     // runs adaptive. The pinned partition count is SIZE-CAPPED (r17 —
     // the r16 verdict's graph_pagerank regression): a non-adaptive

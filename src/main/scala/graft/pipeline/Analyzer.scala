@@ -26,10 +26,10 @@ import graft.sources.KmlSource
   * in one cell) are split by AQE's skew-join handling.
   *
   * Each frame of an analysis is computed once: [[analyze]] persists the
-  * parsed features, every intermediate and the two export tables, so the
-  * summary and all sinks read one copy (the export tables fill on the
-  * first sink that reads them). The frames stay cached until the caller
-  * frees them with [[AnalysisResult.release]].
+  * parsed and numbered features, every intermediate and the two export
+  * tables, so the summary and all sinks read one copy (the export tables
+  * fill on the first sink that reads them). The frames stay cached until
+  * the caller frees them with [[AnalysisResult.release]].
   */
 class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializable {
   val p: AnalyzerParams = params.clamped
@@ -249,22 +249,22 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
     * (reference analyze_complete :849-899): scan → lengths → (if ≥2
     * pipelines) pair join → bundling → effective length → summary with
     * clamps. Ingestion runs the distributed path ([[KmlSource.readMany]]
-    * + [[KmlSource.splitMany]]): files parse on executors and arrival-
+    * + [[KmlSource.numberMany]]): files parse on executors and arrival-
     * order ids come from per-file windows + offset join — no driver
     * collect of features. The caller releases the result. */
   def analyze(spark: SparkSession, path: String): AnalysisResult = {
     import spark.implicits._
-    val features = KmlSource.readMany(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val (splitPipelines, placemarks) = KmlSource.splitMany(features)
-    // lengths and segments both read the pipelines: number them once
-    val pipelines = splitPipelines.persist(StorageLevel.MEMORY_AND_DISK)
-    val counts = features.agg(
-      count(when(KmlSource.IsPipeline, 1)), count(when(!KmlSource.IsPipeline, 1))).first()
+    // pipelines (read by lengths and segments) and placemarks are two
+    // projections of one numbered frame: number the features once
+    val numbered = KmlSource.numberMany(KmlSource.readMany(spark, path))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (pipelines, placemarks) = KmlSource.splitNumbered(numbered)
+    val counts = numbered.agg(
+      count(when(col("is_pipeline"), 1)), count(when(!col("is_pipeline"), 1))).first()
     val nPipes = counts.getLong(0)
     val nPms = counts.getLong(1)
     if (nPipes == 0 && nPms == 0) {
-      features.unpersist()
-      pipelines.unpersist()
+      numbered.unpersist()
       throw new IllegalArgumentException("No valid features found in the file")
     }
 
@@ -283,7 +283,7 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
       return AnalysisResult(lengths, placemarks.toDF(), sections0, overlaps0,
         AnalysisSummary(nPipes, nPms, totalM, totalMi, 0, 0, 0, 0.0,
           totalM, totalMi, 0.0, 0.0, 0.0),
-        Seq(features, pipelines, lengths, sections0, overlaps0))
+        Seq(numbered, lengths, sections0, overlaps0))
     }
 
     val segs = segments(pipelines).persist(StorageLevel.MEMORY_AND_DISK)
@@ -308,8 +308,7 @@ class Analyzer(val params: AnalyzerParams = AnalyzerParams()) extends Serializab
       AnalysisSummary(nPipes, nPms, totalM, totalMi, nSegments, nPairGroups,
         nSections, totalBundledM, effM, effM / Geodesic.SurveyMile,
         savingsM, savingsM / Geodesic.SurveyMile, savingsPct),
-      Seq(features, pipelines, lengths, segs, pairs, sessionized, sections, sectionsOut,
-        overlaps))
+      Seq(numbered, lengths, segs, pairs, sessionized, sections, sectionsOut, overlaps))
   }
 
   /** Re-analysis (reference entry point C, reanalyze :1588-1655): the

@@ -36,6 +36,11 @@ object Coverage {
   private[graft] val BloomBits = 1L << 18
   private[graft] val BloomJ = 4
 
+  /** The bloom build aggregate: one [[BloomBits]]-bit filter over the
+    * (h1, h2) double-hash rows it reads, [[BloomJ]] probes per key. */
+  private[graft] val bloomOr =
+    udaf(new graft.functions.BloomAgg(BloomBits, BloomJ)).withName("bloom_or")
+
   /** Shared build/probe-side key hash (the two sides MUST agree).
     * xxhash64, not md5: the hash runs once per FACT row, and the md5
     * rendering (string concat + hex digest) measured ~2 s of the
@@ -808,14 +813,12 @@ object Coverage {
     // negatives, the measured row reduction, and that the prefilter
     // adds no exchange.
     "join_bloom_prefilter" -> ((s, d) => {
-      s.udf.register("bloom_or",
-        udaf(new graft.functions.BloomAgg(BloomBits, BloomJ)))
       val urgent = t(s, d, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
       val bloom = urgent
         .select(bloomH("bf1:", col("o_orderkey")).as("h1"),
           bloomH("bf2:", col("o_orderkey")).as("h2"))
-        .agg(expr("bloom_or(h1, h2)").as("bf"))
+        .agg(bloomOr(col("h1"), col("h2")).as("bf"))
       val li = t(s, d, "lineitem")
         .withColumn("h1", bloomH("bf1:", col("l_orderkey")))
         .withColumn("h2", bloomH("bf2:", col("l_orderkey")))

@@ -17,6 +17,11 @@ object Extras {
 
   type QFn = (SparkSession, String) => DataFrame
 
+  /** k = 64 minimum-hash distinct sketch over a hash column in
+    * [0, HashMod): the KMV aggregate of agg_kmv_distinct/agg_kmv_ops. */
+  private val kmv64 =
+    udaf(new graft.functions.KmvAgg(64, graft.ops.TextOps.HashMod)).withName("kmv64")
+
   val queries: Map[String, QFn] = Map(
     // exact interpolated percentiles (Spark `percentile` == DuckDB
     // quantile_cont — same linear interpolation)
@@ -112,8 +117,6 @@ object Extras {
     // anchor. The Aggregator needs no pre-distinct shuffle: buffers
     // dedup locally and merge map-side at ≤ k longs each.
     "agg_kmv_distinct" -> ((s, d) => {
-      s.udf.register("kmv64",
-        udaf(new graft.functions.KmvAgg(64, graft.ops.TextOps.HashMod)))
       val li = t(s, d, "lineitem")
       // The sketch and the exact count run as SEPARATE aggregations
       // joined on the tiny group key: a typed-Aggregator UDAF mixed
@@ -123,7 +126,7 @@ object Extras {
       val sketch = li
         .withColumn("h", graft.ops.TextOps.strHash(
           concat(lit("kmv:"), col("l_partkey").cast("string"))))
-        .groupBy("l_returnflag").agg(expr("kmv64(h)").as("kmv"))
+        .groupBy("l_returnflag").agg(kmv64(col("h")).as("kmv"))
       val exact = li.groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("exact_distinct"))
       sketch.join(exact, "l_returnflag")
@@ -155,8 +158,6 @@ object Extras {
     // 0.186·U across sf0.001–0.1 vs bounds 0.20·U / 0.25·U).
     "agg_kmv_ops" -> ((s, d) => {
       import graft.ops.TextOps.HashMod
-      s.udf.register("kmv64",
-        udaf(new graft.functions.KmvAgg(64, HashMod)))
       val li = t(s, d, "lineitem").select("l_orderkey", "l_partkey")
         .join(t(s, d, "orders").select("o_orderkey", "o_custkey"),
           col("l_orderkey") === col("o_orderkey"))
@@ -169,7 +170,7 @@ object Extras {
       val sk = li
         .withColumn("h", graft.ops.TextOps.strHash(
           concat(lit("kmvo:"), col("l_partkey").cast("string"))))
-        .groupBy("nat").agg(expr("kmv64(h)").as("kmv"))
+        .groupBy("nat").agg(kmv64(col("h")).as("kmv"))
         .groupBy().pivot("nat", Seq(1, 2)).agg(first(col("kmv")))
         .withColumnRenamed("1", "ska").withColumnRenamed("2", "skb")
       val est = sk.select(
@@ -221,10 +222,10 @@ object Extras {
     // interleaved the partial merges. At 100 TB: one narrow scan for
     // the sketch, one filtered scan for the re-count; nothing wide.
     "agg_heavy_hitters" -> ((s, d) => {
-      s.udf.register("mg20", udaf(new graft.functions.MisraGriesAgg(20)))
+      val mg20 = udaf(new graft.functions.MisraGriesAgg(20)).withName("mg20")
       val ev = t(s, d, "events")
         .withColumn("item", expr("1000 div (pmod(event_id, 1000) + 1)"))
-      val cand = ev.agg(expr("mg20(item)").as("mg"))
+      val cand = ev.agg(mg20(col("item")).as("mg"))
         .select(explode(col("mg.item")).as("item"))
       val counts = ev.join(broadcast(cand), "item")
         .groupBy("item").agg(count(lit(1)).as("n_item"))
@@ -249,11 +250,10 @@ object Extras {
     // fractions only — 0.9/0.99 thetas are not ulp-safe across
     // engines; the sketched p90/p99 are covered by their verdicts).
     "agg_quantile_sketch" -> ((s, d) => {
-      s.udf.register("qd24",
-        udaf(new graft.functions.QDigestAgg(24, 480)))
+      val qd24 = udaf(new graft.functions.QDigestAgg(24, 480)).withName("qd24")
       val li = t(s, d, "lineitem")
         .withColumn("px_c", cents(col("l_extendedprice")))
-      val sk = li.groupBy("l_returnflag").agg(expr("qd24(px_c)").as("qd"))
+      val sk = li.groupBy("l_returnflag").agg(qd24(col("px_c")).as("qd"))
         .select(col("l_returnflag"), col("qd.n").as("n"),
           col("qd.p50").as("e50"), col("qd.p90").as("e90"),
           col("qd.p99").as("e99"))
@@ -293,7 +293,8 @@ object Extras {
     // (quantity_c, price_c) point cloud per return flag. Integer-valued
     // doubles sum exactly, so the centroid is cross-engine-exact.
     "udaf_bbox" -> ((s, d) => {
-      s.udf.register("bbox_centroid", udaf(graft.functions.BboxCentroidAgg))
+      graft.GraftExtensions.registerIfAbsent(s, "bbox_centroid",
+        udaf(graft.functions.BboxCentroidAgg))
       t(s, d, "lineitem")
         .withColumn("x", cents(col("l_quantity")).cast("double"))
         .withColumn("y", cents(col("l_extendedprice")).cast("double"))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{PipelineRow, PlacemarkRow, RawFeature}
 
@@ -31,7 +31,7 @@ object KmlSource {
     * survey corpus never materializes coordinate arrays, which the
     * previous `binaryFile` + flatMap route (full-row Dataset decode)
     * could not avoid. `seq` is the file-local scan position (the
-    * reference's arrival order), the key [[splitMany]] turns into
+    * reference's arrival order), the key [[numberMany]] turns into
     * globally-unique arrival-order ids. Output columns are unchanged. */
   def readMany(spark: SparkSession, pathOrDir: String): DataFrame =
     spark.read.format("kmz").load(pathOrDir)
@@ -39,62 +39,56 @@ object KmlSource {
         col("geometry_type").as("geometryType"), col("coordinates"),
         col("attrs"))
 
-  /** The routing predicate of [[splitMany]]: true for a [[readMany]] row
-    * that becomes a pipeline, false for one that becomes a placemark. */
-  val IsPipeline: Column = col("geometryType") === "LineString"
-
-  /** Distributed feature routing with the reference's arrival-order id
-    * semantics, for [[readMany]] output: within each file, LineStrings
-    * are numbered by scan position (`row_number` over the per-file
-    * window); per-file counts become cumulative offsets so ids are
-    * globally unique in (source_file, scan) order — for a single file
-    * this is exactly the reference's counter. NOTHING is collected to
-    * the driver at any file count: the offset table is an exclusive
-    * prefix sum over the per-file COUNT table (one tiny row per file),
-    * computed with a window. Placemark fallback ids (`PM_<n>`) get the
-    * same global numbering. ManyFileIngestSpec proves arrival-order
-    * ids stay correct across a 10⁴-file manifest. */
-  def splitMany(features: DataFrame): (Dataset[PipelineRow], Dataset[PlacemarkRow]) = {
-    val spark = features.sparkSession
-    import spark.implicits._
+  /** Distributed feature numbering with the reference's arrival-order
+    * id semantics, for [[readMany]] output: `is_pipeline` routes a row
+    * to the pipelines (LineStrings) or the placemarks, and `gid`
+    * numbers each kind by scan position within its file plus the
+    * file's offset, so ids are globally unique in (source_file, scan)
+    * order — for a single file exactly the reference's counter. NOTHING
+    * is collected: the offsets are a windowed exclusive prefix sum over
+    * the per-(file, kind) COUNT table. ManyFileIngestSpec
+    * proves arrival-order ids across a 10⁴-file manifest. */
+  def numberMany(features: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val local = features
+      .withColumn("is_pipeline", col("geometryType") === "LineString")
+      .withColumn("fid", row_number().over(
+        Window.partitionBy("source_file", "is_pipeline").orderBy("seq")).cast("long") - 1L)
+    // bounded: ≤ 2 × #files count rows — the cardinality of the file
+    // listing the scan already holds — never feature data
+    val wf = Window.partitionBy("is_pipeline").orderBy("source_file")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offDf = local.groupBy("is_pipeline", "source_file")
+      .agg(count(lit(1)).as("n"))
+      .withColumn("off", coalesce(sum("n").over(wf), lit(0L)))
+      .select("is_pipeline", "source_file", "off")
+    local.join(broadcast(offDf), Seq("is_pipeline", "source_file"))
+      .select(col("is_pipeline"), (col("fid") + col("off")).as("gid"),
+        col("objectid"), col("name"), col("coordinates"))
+  }
 
-    val w = Window.partitionBy("source_file").orderBy("seq")
-
-    def withGlobalIdx(df: DataFrame): DataFrame = {
-      val local = df.withColumn("fid", row_number().over(w).cast("long") - 1L)
-      // The single-partition window is intentional and bounded: its
-      // input is the per-file count aggregate — #files rows of
-      // (name, long), the same cardinality as the file LISTING the
-      // scan already holds — never feature data. One task over 10⁶
-      // tiny rows is milliseconds; the alternative (collect + scanLeft
-      // on the driver) put the same table in driver memory instead.
-      val wf = graft.ops.WindowUtil.boundedGlobal(col("source_file"))
-        .orderBy("source_file")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offDf = local.groupBy("source_file")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("off", coalesce(sum("n").over(wf), lit(0L)))
-        .select("source_file", "off")
-      local.join(broadcast(offDf), "source_file")
-        .withColumn("gid", col("fid") + col("off"))
-    }
-
-    val pipes = withGlobalIdx(features.filter(IsPipeline))
+  /** The two tables of a [[numberMany]] frame: pipelines keep their
+    * `gid` as `id`; placemarks without an object id get `PM_<gid+1>`. */
+  def splitNumbered(numbered: DataFrame): (Dataset[PipelineRow], Dataset[PlacemarkRow]) = {
+    val spark = numbered.sparkSession
+    import spark.implicits._
+    val pipes = numbered.filter(col("is_pipeline"))
       .select(col("gid").cast("int").as("id"), col("objectid"), col("name"),
         col("coordinates"))
       .as[PipelineRow]
-
-    val pms = withGlobalIdx(features.filter(!IsPipeline))
+    val pms = numbered.filter(!col("is_pipeline"))
       .select(
         when(col("objectid") =!= "N/A", col("objectid"))
           .otherwise(concat(lit("PM_"), (col("gid") + 1).cast("string")))
           .as("placemarkId"),
         col("name"), lit(1).as("count"))
       .as[PlacemarkRow]
-
     (pipes, pms)
   }
+
+  /** [[numberMany]] then [[splitNumbered]]. */
+  def splitMany(features: DataFrame): (Dataset[PipelineRow], Dataset[PlacemarkRow]) =
+    splitNumbered(numberMany(features))
 
   /** Route features into the two tables of the reference's data model
     * (reference :110-128): pipelines keep arrival order as `id`. */

@@ -352,20 +352,30 @@ object PlanDump {
     spark
   }
 
+  /** Writes every audited plan, or only the audited queries named in
+    * `args`, and their `_fingerprints.txt` lines (the other lines are
+    * kept as committed). */
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(Audited.contains)
+    require(unknown.isEmpty, s"not audited: ${unknown.mkString(", ")}")
+    val names = if (args.isEmpty) Audited else args.toSeq
     val spark = session()
     val dir = java.nio.file.Paths.get(PlansDir)
     java.nio.file.Files.createDirectories(dir)
-    val fps = Audited.map { name =>
+    val fpFile = dir.resolve("_fingerprints.txt")
+    val committed = if (!java.nio.file.Files.exists(fpFile)) Map.empty[String, String]
+      else java.nio.file.Files.readString(fpFile).linesIterator
+        .map(l => l.takeWhile(_ != ' ') -> l).toMap
+    val fresh = names.map { name =>
       val plan = normalizedPlan(spark, name)
       java.nio.file.Files.writeString(dir.resolve(s"$name.txt"), plan)
       val fp = PlanFingerprint.of(
         graft.SparkEntry.queries(name)(spark, Sf)).render
       println(s"[plandump] $name $fp")
-      s"$name $fp"
-    }
-    java.nio.file.Files.writeString(
-      dir.resolve("_fingerprints.txt"), fps.mkString("", "\n", "\n"))
+      name -> s"$name $fp"
+    }.toMap
+    val fps = Audited.flatMap(n => fresh.get(n).orElse(committed.get(n)))
+    java.nio.file.Files.writeString(fpFile, fps.mkString("", "\n", "\n"))
     spark.stop()
   }
 }

@@ -58,7 +58,28 @@ object Bridge {
     */
   def freshLocalCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
+    checkpointInto(ds, ds.sparkSession)
+  }
+
+  /** [[freshLocalCheckpoint]] of `df` hash-partitioned on `key` into
+    * `parts` partitions and sorted within them, compiled with AQE off
+    * so the checkpoint's LogicalRDD carries that HashPartitioning and
+    * ordering (AQE's plan hides both). Compiles in a private clone of
+    * `df`'s session and hands the checkpoint back to `df`'s session,
+    * whose conf is never written. */
+  def freshLocalCheckpoint(df: org.apache.spark.sql.DataFrame, key: String,
+      parts: Int): org.apache.spark.sql.DataFrame = {
+    val laidOut = df.repartition(parts, org.apache.spark.sql.functions.col(key))
+      .sortWithinPartitions(key)
+    val caller = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val clone = caller.cloneSession()
+    clone.sessionState.conf.setConf(
+      org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    checkpointInto(org.apache.spark.sql.classic.Dataset.ofRows(clone, analyzed(laidOut)), caller)
+  }
+
+  private def checkpointInto(ds: org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row],
+      spark: org.apache.spark.sql.classic.SparkSession): org.apache.spark.sql.DataFrame = {
     val rdd = ds.queryExecution.toRdd.map(_.copy()).localCheckpoint()
     // fromDataset keeps outputPartitioning/ordering (so a frame
     // pre-partitioned on its join key re-enters the next round with

@@ -82,4 +82,40 @@ class ManyFileIngestSpec extends AnyFunSuite {
       Files.delete(dir)
     }
   }
+
+  test("mixed files: pipeline ids 0..N-1 and PM_<n> placemark ids in (file, scan) order") {
+    def doc(features: Seq[(String, Boolean)]): String = {
+      val pms = features.map { case (name, line) =>
+        val geom =
+          if (line) "<LineString><coordinates>-97.0,31.0,0 -97.1,31.1,0</coordinates></LineString>"
+          else "<Point><coordinates>-97.0,31.0,0</coordinates></Point>"
+        s"<Placemark><name>$name</name>$geom</Placemark>"
+      }.mkString("\n")
+      s"""<?xml version="1.0" encoding="UTF-8"?>
+         |<kml xmlns="http://www.opengis.net/kml/2.2"><Document>
+         |$pms
+         |</Document></kml>""".stripMargin
+    }
+    val dir: Path = Files.createTempDirectory("graft_mixedfiles")
+    // b.kml holds no pipeline; creation order != name order
+    val files = Seq(
+      "c.kml" -> Seq("c_l0" -> true, "c_p0" -> false),
+      "b.kml" -> Seq("b_p0" -> false, "b_p1" -> false),
+      "a.kml" -> Seq("a_l0" -> true, "a_p0" -> false, "a_l1" -> true, "a_p1" -> false))
+    files.foreach { case (name, fs) => Files.writeString(dir.resolve(name), doc(fs)) }
+    try {
+      val (pipes, pms) = KmlSource.splitMany(KmlSource.readMany(spark, dir.toString))
+      val pipeIds = pipes.select("id", "name").collect()
+        .map(r => r.getInt(0) -> r.getString(1)).sortBy(_._1).toSeq
+      assert(pipeIds == Seq(0 -> "a_l0", 1 -> "a_l1", 2 -> "c_l0"))
+      val pmIds = pms.select("placemarkId", "name").collect()
+        .map(r => r.getString(0) -> r.getString(1)).sortBy(_._2).toSeq
+      assert(pmIds == Seq("PM_1" -> "a_p0", "PM_2" -> "a_p1", "PM_3" -> "b_p0",
+        "PM_4" -> "b_p1", "PM_5" -> "c_p0"))
+    } finally {
+      import scala.jdk.CollectionConverters._
+      Files.list(dir).iterator().asScala.foreach(Files.delete)
+      Files.delete(dir)
+    }
+  }
 }

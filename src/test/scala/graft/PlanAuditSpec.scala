@@ -124,7 +124,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // committed; regenerating them here means a plan regression (lost
     // broadcast, extra exchange, dropped pushdown) fails CI and shows
     // up as a git diff on the committed artifact — refresh with
-    //   sbt "runMain graft.tools.PlanDump"
+    //   sbt "runMain graft.tools.PlanDump [names...]"
     // after an INTENTIONAL plan change. Isolated newSession with every
     // plan-relevant conf pinned from PlanDump.PinnedConfs: newSession
     // inherits the ROOT session's creation options, and earlier suites
@@ -139,24 +139,34 @@ class PlanAuditSpec extends AnyFunSuite {
     // "Scan parquet → InMemoryTableScan" drift. Dropping the cache
     // only costs those suites a recompute.
     s2.sharedState.cacheManager.clearCache()
-    graft.tools.PlanDump.Audited.foreach { name =>
+    // every audited plan is compared; drifts and build failures are
+    // collected and reported together, so one query that cannot be
+    // planned (e.g. a missing input file) hides none after it
+    val problems = graft.tools.PlanDump.Audited.flatMap { name =>
       val committed = java.nio.file.Paths.get(
         graft.tools.PlanDump.PlansDir, s"$name.txt")
-      assert(java.nio.file.Files.exists(committed),
-        s"missing committed plan for $name — run graft.tools.PlanDump")
-      val want = java.nio.file.Files.readString(committed)
-      val got = graft.tools.PlanDump.normalizedPlan(s2, name)
-      if (got != want) {
-        val diff = want.linesIterator.zipAll(got.linesIterator, "<EOF>", "<EOF>")
-          .zipWithIndex.find { case ((w, g), _) => w != g }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"/tmp/plan_drift_$name.txt"), got)
-        fail(s"plan drift for $name at line ${diff.map(_._2)}: " +
-          s"committed=${diff.map(_._1._1)} regenerated=${diff.map(_._1._2)} " +
-          s"(full regenerated plan: /tmp/plan_drift_$name.txt) — " +
-          s"if intentional, refresh fixtures/plans via PlanDump and commit")
+      if (!java.nio.file.Files.exists(committed))
+        Some(s"missing committed plan for $name — run graft.tools.PlanDump $name")
+      else scala.util.Try(graft.tools.PlanDump.normalizedPlan(s2, name)) match {
+        case scala.util.Failure(e) => Some(s"$name failed to plan: $e")
+        case scala.util.Success(got) =>
+          val want = java.nio.file.Files.readString(committed)
+          if (got == want) None
+          else {
+            val diff = want.linesIterator.zipAll(got.linesIterator, "<EOF>", "<EOF>")
+              .zipWithIndex.find { case ((w, g), _) => w != g }
+            java.nio.file.Files.writeString(
+              java.nio.file.Paths.get(s"/tmp/plan_drift_$name.txt"), got)
+            Some(s"plan drift for $name at line ${diff.map(_._2)}: " +
+              s"committed=${diff.map(_._1._1)} regenerated=${diff.map(_._1._2)} " +
+              s"(full regenerated plan: /tmp/plan_drift_$name.txt)")
+          }
       }
     }
+    assert(problems.isEmpty, problems.mkString(
+      s"${problems.size} of ${graft.tools.PlanDump.Audited.size} audited plans " +
+        "do not match (if intentional, refresh with graft.tools.PlanDump <names> " +
+        "and commit):\n", "\n", ""))
   }
 
   test("plan fingerprint is session-stable on scalar-subquery plans") {

@@ -144,7 +144,7 @@ class SurveyExportSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("release() leaves no frame of the result cached") {
-    assert(result.cached.length == 9)
+    assert(result.cached.length == 8)
     assert(result.cached.forall(_.storageLevel != StorageLevel.NONE))
     result.release()
     val frames = result.cached ++
