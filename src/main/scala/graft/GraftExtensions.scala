@@ -128,4 +128,14 @@ object GraftExtensions {
       f: org.apache.spark.sql.expressions.UserDefinedFunction): Unit = synchronized {
     if (!spark.catalog.functionExists(name)) spark.udf.register(name, f)
   }
+
+  /** Appends `strategy` to the session's planner strategies unless it
+    * is there already: for sessions launched without
+    * `spark.sql.extensions=graft.GraftExtensions`, which injects it. */
+  def strategyIfAbsent(spark: org.apache.spark.sql.SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = synchronized {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cur = s.experimental.extraStrategies
+    if (!cur.contains(strategy)) s.experimental.extraStrategies = cur :+ strategy
+  }
 }

@@ -80,8 +80,9 @@ case class AsofJoinNode(
   *    or (unhinted) the right child's plan-stats size fits under
   *    `spark.sql.autoBroadcastJoinThreshold`;
   *  - [[AsofJoinExec]] (co-partitioned streaming merge) otherwise.
-  * Injected by [[graft.GraftExtensions]] and self-registered by
-  * [[AsofJoinNative.asof]] via `spark.experimental.extraStrategies`.
+  * Injected by [[graft.GraftExtensions]]; [[AsofJoinNative.asof]] adds
+  * it through [[graft.GraftExtensions.strategyIfAbsent]] in sessions
+  * launched without the extension.
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -684,16 +685,6 @@ object BroadcastAsofJoinExec {
   */
 object AsofJoinNative {
 
-  /** Registers [[AsofJoinStrategy]] in the session (idempotent, public
-    * `experimental.extraStrategies` API — works in sessions launched
-    * without `spark.sql.extensions=graft.GraftExtensions`). */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(AsofJoinStrategy))
-      s.experimental.extraStrategies = cur :+ AsofJoinStrategy
-  }
-
   /** @param rightPayload right columns carried to the match (renamed as
     *                     given; names must not collide with left's).
     * @param tieBreak     deterministic order among right rows sharing a
@@ -730,7 +721,7 @@ object AsofJoinNative {
         Seq(col(rightTs).as("__rts")) ++ tieCols ++
         payload.map { case (src, dst) => col(src).as(dst) }: _*)
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.GraftExtensions.strategyIfAbsent(spark, AsofJoinStrategy)
     val lPlan = Bridge.analyzed(left)
     val rPlan = Bridge.analyzed(rSel)
     def attr(plan: LogicalPlan, name: String): Attribute =

@@ -132,6 +132,25 @@ object IndexStore {
       } finally pool.shutdownNow()
     }
 
+  /** Write `df` partitioned by `keys`, hash-repartitioned on them first
+    * into min(`bound`, shuffle partitions) tasks, where `bound` is the
+    * number of values the keys take (cells or buckets). Each key value
+    * lands in one task, so each partition directory gets one file set
+    * instead of tasks × cells files. The count is explicit because AQE
+    * coalesces a small `repartition(col)` shuffle into one or two
+    * partitions, and one task then writes every cell in turn; it never
+    * coalesces a by-number repartition. It is bounded because task
+    * overhead grows with it: 500 × 64 rows into 64 `cid` dirs on 4
+    * cores wrote in 1.1–1.2 s with 1 task, 0.5 s with 4–8, 1.3 s with
+    * 64 and 2.2 s with 200. At scale the count is the one
+    * `repartition(col)` plans anyway. */
+  private def writePartitioned(df: DataFrame, mode: String, path: String,
+      bound: Int, keys: String*): Unit =
+    df.repartition(
+        math.min(bound, df.sparkSession.sessionState.conf.numShufflePartitions),
+        keys.map(col): _*)
+      .write.mode(mode).partitionBy(keys: _*).parquet(path)
+
   // ------------------------------------------- generation manifests
 
   private val ManifestRe = "manifest-(\\d+)\\.json".r
@@ -345,11 +364,9 @@ object IndexStore {
       idCol: String): Unit = {
     val spark = ids.sparkSession
     val gen = currentGen(spark, dir)
-    ids.select(col(idCol).cast("long").as("n_id")).distinct()
-      .withColumn("db", pmod(xxhash64(col("n_id")), lit(TombBuckets)).cast("int"))
-      .repartition(col("db"))
-      .write.mode("append").partitionBy("db")
-      .parquet(tableDirAt(dir, gen, "tombstones"))
+    writePartitioned(ids.select(col(idCol).cast("long").as("n_id")).distinct()
+        .withColumn("db", pmod(xxhash64(col("n_id")), lit(TombBuckets)).cast("int")),
+      "append", tableDirAt(dir, gen, "tombstones"), TombBuckets, "db")
   }
 
   /** The generation's tombstone id table, if any deletes happened.
@@ -445,17 +462,10 @@ object IndexStore {
     // of a write + a re-scan, and the two table writes then overlap
     val cents = centDf.orderBy("cid").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
-    // repartition on the partition column before the partitioned write:
-    // without it every task writes a file into every cell dir (tasks x
-    // cells files — at 1000 executors x O(sqrt N) cells that is a
-    // small-file explosion); with it each cell's rows land in one task
-    // (cells = the parallelism knob, O(sqrt N) under autoCentroids)
     inParallel(
       () => centDf.write.mode("overwrite").parquet(s"$root/centroids"),
-      () => graft.streaming.StreamAnnServe.assignCorpus(corpus, cents)
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$root/assign"))
+      () => writePartitioned(graft.streaming.StreamAnnServe.assignCorpus(corpus, cents),
+        "overwrite", s"$root/assign", cents.size, "cid"))
     commitGen(spark, dir, gen)
   }
 
@@ -474,10 +484,8 @@ object IndexStore {
     val spark = newVecs.sparkSession
     val gen = currentGen(spark, dir)
     val cents = loadCentroidsAt(spark, tableDirAt(dir, gen, "centroids"))
-    graft.streaming.StreamAnnServe.assignCorpus(newVecs, cents)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(tableDirAt(dir, gen, "assign"))
+    writePartitioned(graft.streaming.StreamAnnServe.assignCorpus(newVecs, cents),
+      "append", tableDirAt(dir, gen, "assign"), cents.size, "cid")
   }
 
   /** Compact an appended assignment: every [[appendAnn]] adds one file
@@ -497,15 +505,15 @@ object IndexStore {
     val (gen, root) = nextGenRoot(spark, dir)
     // tombstoned rows are dropped PHYSICALLY here: the rewritten
     // generation carries neither them nor a tombstone table; the two
-    // rewrites are independent — overlapped write jobs (§2.6)
+    // rewrites are independent — overlapped write jobs (§2.6); no cell
+    // count is at hand, so the shuffle partitions bound the assign write
     inParallel(
-      () => maskDeleted(
-        spark.read.schema(annAssignSchema)
-          .parquet(tableDirAt(dir, cur, "assign")),
-        "n_id", tombstonesAt(spark, dir, cur))
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$root/assign"),
+      () => writePartitioned(maskDeleted(
+          spark.read.schema(annAssignSchema)
+            .parquet(tableDirAt(dir, cur, "assign")),
+          "n_id", tombstonesAt(spark, dir, cur)),
+        "overwrite", s"$root/assign",
+        spark.sessionState.conf.numShufflePartitions, "cid"),
       () => spark.read.parquet(tableDirAt(dir, cur, "centroids"))
         .write.mode("overwrite").parquet(s"$root/centroids"))
     midCompaction()
@@ -568,9 +576,6 @@ object IndexStore {
       textCol: String = "text"): Unit = {
     val spark = train.sparkSession
     val (gen, root) = nextGenRoot(spark, dir)
-    // repartition on the partition column first (see writeAnn): one
-    // file set per bucket instead of tasks x buckets; AttrBuckets is
-    // the write-parallelism knob at scale.
     // ONE raw-text shingle+hash pass (r16, guide §1.2): the minhash
     // lanes are a pure function of the shingle-hash set the artifact
     // stores anyway. r17: bands derive from the IN-FLIGHT checkpointed
@@ -584,14 +589,10 @@ object IndexStore {
         DedupOps.shingleHashes(col(textCol)).as("t_shs"))
       .localCheckpoint()
     inParallel(
-      () => shs.withColumn("tb", tbCol(col("t_id")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/shingles"),
-      () => DedupOps.bandKeysFromShingles(shs, "t_id", "t_shs")
-        .select(col("doc_id").as("t_id"), col("band"), col("key"))
-        .withColumn("pb", pbCol(col("band"), col("key")))
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$root/bands"))
+      () => writePartitioned(shs.withColumn("tb", tbCol(col("t_id"))),
+        "overwrite", s"$root/shingles", AttrBuckets, "tb"),
+      () => writePartitioned(attrBands(shs), "overwrite", s"$root/bands",
+        2 * AttrBuckets, "pb"))
     commitGen(spark, dir, gen)
   }
 
@@ -615,17 +616,17 @@ object IndexStore {
         DedupOps.shingleHashes(col(textCol)).as("t_shs"))
       .localCheckpoint()
     inParallel(
-      () => shs.withColumn("tb", tbCol(col("t_id")))
-        .repartition(col("tb"))
-        .write.mode("append").partitionBy("tb")
-        .parquet(tableDirAt(dir, gen, "shingles")),
-      () => DedupOps.bandKeysFromShingles(shs, "t_id", "t_shs")
-        .select(col("doc_id").as("t_id"), col("band"), col("key"))
-        .withColumn("pb", pbCol(col("band"), col("key")))
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb")
-        .parquet(tableDirAt(dir, gen, "bands")))
+      () => writePartitioned(shs.withColumn("tb", tbCol(col("t_id"))),
+        "append", tableDirAt(dir, gen, "shingles"), AttrBuckets, "tb"),
+      () => writePartitioned(attrBands(shs), "append",
+        tableDirAt(dir, gen, "bands"), 2 * AttrBuckets, "pb"))
   }
+
+  /** The band rows (t_id, band, key, pb) of a (t_id, t_shs) frame. */
+  private def attrBands(shs: DataFrame): DataFrame =
+    DedupOps.bandKeysFromShingles(shs, "t_id", "t_shs")
+      .select(col("doc_id").as("t_id"), col("band"), col("key"))
+      .withColumn("pb", pbCol(col("band"), col("key")))
 
   /** Compact the attribution artifact after takedowns: physically
     * drop tombstoned train docs from BOTH the band postings and the
@@ -650,12 +651,11 @@ object IndexStore {
     val (gen, root) = nextGenRoot(spark, dir)
     // two independent rewrites: overlapped write jobs (§2.6)
     inParallel(
-      () => bands.drop("pb").withColumn("pb", pbCol(col("band"), col("key")))
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$root/bands"),
-      () => shingles.drop("tb").withColumn("tb", tbCol(col("t_id")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/shingles"))
+      () => writePartitioned(
+        bands.drop("pb").withColumn("pb", pbCol(col("band"), col("key"))),
+        "overwrite", s"$root/bands", 2 * AttrBuckets, "pb"),
+      () => writePartitioned(shingles.drop("tb").withColumn("tb", tbCol(col("t_id"))),
+        "overwrite", s"$root/shingles", AttrBuckets, "tb"))
     midCompaction()
     commitGen(spark, dir, gen)
   }
@@ -712,13 +712,12 @@ object IndexStore {
     val (gen, root) = nextGenRoot(spark(docs), dir)
     val tk = docs.select(col("doc_id"),
       graft.ops.TextOps.tokens(col(textCol)).as("toks"))
-    tk.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("term", "doc_id", "dl")
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .withColumn("tb", tbTermCol(col("term")))
-      .repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$root/postings")
+    writePartitioned(tk.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+          explode(col("toks")).as("term"))
+        .groupBy("term", "doc_id", "dl")
+        .agg(count(lit(1)).cast("long").as("tf"))
+        .withColumn("tb", tbTermCol(col("term"))),
+      "overwrite", s"$root/postings", TextBuckets, "tb")
     val posts = spark(docs).read.schema(textPostingsSchema)
       .parquet(s"$root/postings")
     // stats from the READ-BACK postings, not a third tokenize pass of
@@ -729,13 +728,8 @@ object IndexStore {
     // Both derived tables read the same written postings: overlapped
     // write jobs (§2.6)
     inParallel(
-      () => posts.groupBy("term").agg(count(lit(1)).as("df"))
-        .select(col("term"), col("df"),
-          expr(s"((2 * ${nDocs}L - 2 * df + 1) * 1000) div (2 * df + 1)")
-            .as("idf_milli"))
-        .withColumn("tb", tbTermCol(col("term")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/terms"),
+      () => writePartitioned(termStats(posts, nDocs), "overwrite",
+        s"$root/terms", TextBuckets, "tb"),
       () => posts.agg(coalesce(sum("tf"), lit(0L)).cast("long").as("n_tokens"))
         .select(lit(nDocs).cast("long").as("n_docs"), col("n_tokens"))
         .write.mode("overwrite").parquet(s"$root/stats"))
@@ -776,10 +770,8 @@ object IndexStore {
       .agg(count(lit(1)).cast("long").as("tf"))
       .localCheckpoint()
     inParallel(
-      () => posts.withColumn("tb", tbTermCol(col("term")))
-        .repartition(col("tb"))
-        .write.mode("append").partitionBy("tb")
-        .parquet(tableDirAt(dir, gen, "postings")),
+      () => writePartitioned(posts.withColumn("tb", tbTermCol(col("term"))),
+        "append", tableDirAt(dir, gen, "postings"), TextBuckets, "tb"),
       () => posts.agg(lit(nNew).cast("long").as("n_docs"),
           coalesce(sum("tf"), lit(0L)).cast("long").as("n_tokens"))
         .write.mode("append").parquet(tableDirAt(dir, gen, "stats")))
@@ -818,16 +810,10 @@ object IndexStore {
       .localCheckpoint()
     val (gen, root) = nextGenRoot(spark, dir)
     inParallel(
-      () => posts.drop("tb").withColumn("tb", tbTermCol(col("term")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/postings"),
-      () => posts.groupBy("term").agg(count(lit(1)).as("df"))
-        .select(col("term"), col("df"),
-          expr(s"((2 * ${nDocs}L - 2 * df + 1) * 1000) div (2 * df + 1)")
-            .as("idf_milli"))
-        .withColumn("tb", tbTermCol(col("term")))
-        .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/terms"),
+      () => writePartitioned(posts.drop("tb").withColumn("tb", tbTermCol(col("term"))),
+        "overwrite", s"$root/postings", TextBuckets, "tb"),
+      () => writePartitioned(termStats(posts, nDocs), "overwrite",
+        s"$root/terms", TextBuckets, "tb"),
       () => posts.agg(coalesce(sum("tf"), lit(0L)).cast("long").as("n_tokens"))
         .select(lit(nDocs).cast("long").as("n_docs"), col("n_tokens"))
         .write.mode("overwrite").parquet(s"$root/stats"))
@@ -836,6 +822,15 @@ object IndexStore {
   }
 
   private def spark(df: DataFrame): SparkSession = df.sparkSession
+
+  /** Per-term df and the exact integer BM25 idf_milli over `nDocs`
+    * docs, bucketed by term hash: the `terms` table of `posts`. */
+  private def termStats(posts: DataFrame, nDocs: Long): DataFrame =
+    posts.groupBy("term").agg(count(lit(1)).as("df"))
+      .select(col("term"), col("df"),
+        expr(s"((2 * ${nDocs}L - 2 * df + 1) * 1000) div (2 * df + 1)")
+          .as("idf_milli"))
+      .withColumn("tb", tbTermCol(col("term")))
 
   private[graft] def tbTermCol(
       term: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -908,8 +903,7 @@ object IndexStore {
     * `nb = hash(node) mod B` (frontier scoring reads only the
     * frontier's buckets), and the auto-sized first-K entry vectors.
     * The edge build is the one corpus-scale job; both serving tables
-    * repartition on their bucket column before the partitioned write
-    * (the [[writeAnn]] small-file discipline). */
+    * go through [[writePartitioned]]. */
   def writeKnn(corpus: DataFrame, dir: String): Unit = {
     val spark = corpus.sparkSession
     val kCent = SimilarityOps.autoCentroids(corpus.count())
@@ -923,18 +917,12 @@ object IndexStore {
           norm(col("embedding")).as("e_nrm"))
         .filter(definedNrm(col("e_nrm")))
         .write.mode("overwrite").parquet(s"$root/entries"),
-      () => SimilarityOps.knnGraph(corpus, SimilarityOps.KnnK, kCent,
+      () => writePartitioned(SimilarityOps.knnGraph(corpus, SimilarityOps.KnnK, kCent,
           SimilarityOps.KnnProbes)
-        .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb"))
-        .repartition(col("sb"))
-        .write.mode("overwrite").partitionBy("sb").parquet(s"$root/edges"),
-      () => corpus
-        .select(col("vec_id").as("node"), col("embedding").as("n_emb"),
-          norm(col("embedding")).as("n_nrm"))
-        .filter(definedNrm(col("n_nrm")))
-        .withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("overwrite").partitionBy("nb").parquet(s"$root/nodes"))
+          .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb")),
+        "overwrite", s"$root/edges", KnnBuckets, "sb"),
+      () => writePartitioned(nodeRows(corpus), "overwrite", s"$root/nodes",
+        KnnBuckets, "nb"))
     commitGen(spark, dir, gen)
   }
 
@@ -1007,21 +995,21 @@ object IndexStore {
     // edge and node appends touch different tables: overlapped (§2.6);
     // the node write needs nothing from the search branch
     inParallel(
-      () => newEdges.unionByName(
-          newEdges.select(col("dst").as("src"), col("src").as("dst")))
-        .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb"))
-        .repartition(col("sb"))
-        .write.mode("append").partitionBy("sb")
-        .parquet(tableDirAt(dir, gen, "edges")),
-      () => newVecs
-        .select(col("vec_id").as("node"), col("embedding").as("n_emb"),
-          norm(col("embedding")).as("n_nrm"))
-        .filter(definedNrm(col("n_nrm")))
-        .withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("append").partitionBy("nb")
-        .parquet(tableDirAt(dir, gen, "nodes")))
+      () => writePartitioned(newEdges.unionByName(
+            newEdges.select(col("dst").as("src"), col("src").as("dst")))
+          .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb")),
+        "append", tableDirAt(dir, gen, "edges"), KnnBuckets, "sb"),
+      () => writePartitioned(nodeRows(newVecs), "append",
+        tableDirAt(dir, gen, "nodes"), KnnBuckets, "nb"))
   }
+
+  /** The node-store rows (node, n_emb, n_nrm, nb) of a (vec_id,
+    * embedding) frame: vectors with a defined norm, bucketed by id. */
+  private def nodeRows(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("node"), col("embedding").as("n_emb"),
+        norm(col("embedding")).as("n_nrm"))
+      .filter(definedNrm(col("n_nrm")))
+      .withColumn("nb", nodeBucket(col("node")))
 
   /** Scheduled graph maintenance — the degree prune every NSW store
     * runs: [[appendKnn]]'s back-edges grow old-node out-degrees past
@@ -1057,23 +1045,20 @@ object IndexStore {
     // three independent rewrites of the current generation into the
     // next one: overlapped write jobs (§2.6), manifest-gated below
     inParallel(
-      () => edges.select("src", "dst").distinct()
-        .join(nodes.select(col("node").as("src"), col("n_emb").as("s_emb"),
-          col("n_nrm").as("s_nrm")), "src")
-        .join(nodes.select(col("node").as("dst"), col("n_emb").as("d_emb"),
-          col("n_nrm").as("d_nrm")), "dst")
-        .withColumn("sim", graft.ops.SimilarityOps.dot(col("s_emb"), col("d_emb"))
-          / (col("s_nrm") * col("d_nrm")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= SimilarityOps.KnnK)
-        .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb"))
-        .repartition(col("sb"))
-        .write.mode("overwrite").partitionBy("sb")
-        .parquet(s"$root/edges"),
-      () => nodes.drop("nb").withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("overwrite").partitionBy("nb")
-        .parquet(s"$root/nodes"),
+      () => writePartitioned(
+        edges.select("src", "dst").distinct()
+          .join(nodes.select(col("node").as("src"), col("n_emb").as("s_emb"),
+            col("n_nrm").as("s_nrm")), "src")
+          .join(nodes.select(col("node").as("dst"), col("n_emb").as("d_emb"),
+            col("n_nrm").as("d_nrm")), "dst")
+          .withColumn("sim", graft.ops.SimilarityOps.dot(col("s_emb"), col("d_emb"))
+            / (col("s_nrm") * col("d_nrm")))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= SimilarityOps.KnnK)
+          .select(col("src"), col("dst"), nodeBucket(col("src")).as("sb")),
+        "overwrite", s"$root/edges", KnnBuckets, "sb"),
+      () => writePartitioned(nodes.drop("nb").withColumn("nb", nodeBucket(col("node"))),
+        "overwrite", s"$root/nodes", KnnBuckets, "nb"),
       () => maskDeleted(spark.read.parquet(tableDirAt(dir, cur, "entries")),
           "node", tomb)
         .write.mode("overwrite").parquet(s"$root/entries"))
@@ -1135,21 +1120,20 @@ object IndexStore {
     // derivations of the corpus: overlapped write jobs (§2.6),
     // manifest-gated below
     inParallel(
-      () => (0 to nLayers).map { l =>
-          val members = if (l == 0) corpus
-            else corpus.filter(SimilarityOps.layerMemberPred(l))
-          // pinned depths beyond the precomputed range (never hit by
-          // autoLayers — 16^12 rows) fall back to knnGraph's own count
-          val kCent = if (l < cnts.length)
-            SimilarityOps.autoCentroids(cnts(l)) else SimilarityOps.AutoCentroids
-          SimilarityOps.mirroredEdges(SimilarityOps.knnGraph(
-              members, SimilarityOps.LayerK, nCentroids = kCent))
-            .select(lit(l).as("layer"), col("src"), col("dst"),
-              nodeBucket(col("src")).as("sb"))
-        }.reduce(_ unionByName _)
-        .repartition(col("layer"), col("sb"))
-        .write.mode("overwrite").partitionBy("layer", "sb")
-        .parquet(s"$root/ledges"),
+      () => writePartitioned(
+        (0 to nLayers).map { l =>
+            val members = if (l == 0) corpus
+              else corpus.filter(SimilarityOps.layerMemberPred(l))
+            // pinned depths beyond the precomputed range (never hit by
+            // autoLayers — 16^12 rows) fall back to knnGraph's own count
+            val kCent = if (l < cnts.length)
+              SimilarityOps.autoCentroids(cnts(l)) else SimilarityOps.AutoCentroids
+            SimilarityOps.mirroredEdges(SimilarityOps.knnGraph(
+                members, SimilarityOps.LayerK, nCentroids = kCent))
+              .select(lit(l).as("layer"), col("src"), col("dst"),
+                nodeBucket(col("src")).as("sb"))
+          }.reduce(_ unionByName _),
+        "overwrite", s"$root/ledges", (nLayers + 1) * KnnBuckets, "layer", "sb"),
       () => corpus
         .filter(SimilarityOps.layerMemberPred(nLayers)
           || col("vec_id") < SimilarityOps.LayerEntryK)
@@ -1157,13 +1141,8 @@ object IndexStore {
           norm(col("embedding")).as("e_nrm"))
         .filter(definedNrm(col("e_nrm")))
         .write.mode("overwrite").parquet(s"$root/lentries"),
-      () => corpus
-        .select(col("vec_id").as("node"), col("embedding").as("n_emb"),
-          norm(col("embedding")).as("n_nrm"))
-        .filter(definedNrm(col("n_nrm")))
-        .withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("overwrite").partitionBy("nb").parquet(s"$root/lnodes"))
+      () => writePartitioned(nodeRows(corpus), "overwrite", s"$root/lnodes",
+        KnnBuckets, "nb"))
     commitGen(spark, dir, gen)
   }
 
@@ -1190,24 +1169,18 @@ object IndexStore {
     // write jobs (§2.6); the node/entry branches need nothing from the
     // insert search
     inParallel(
-      () => perLayer.toSeq.sortBy(_._1).map { case (l, e) =>
-          val ed = e.localCheckpoint(eager = false)
-          ed.unionByName(
-              ed.select(col("dst").as("src"), col("src").as("dst")))
-            .select(lit(l).as("layer"), col("src"), col("dst"),
-              nodeBucket(col("src")).as("sb"))
-        }.reduce(_ unionByName _)
-        .repartition(col("layer"), col("sb"))
-        .write.mode("append").partitionBy("layer", "sb")
-        .parquet(tableDirAt(dir, gen, "ledges")),
-      () => newVecs
-        .select(col("vec_id").as("node"), col("embedding").as("n_emb"),
-          norm(col("embedding")).as("n_nrm"))
-        .filter(definedNrm(col("n_nrm")))
-        .withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("append").partitionBy("nb")
-        .parquet(tableDirAt(dir, gen, "lnodes")),
+      () => writePartitioned(
+        perLayer.toSeq.sortBy(_._1).map { case (l, e) =>
+            val ed = e.localCheckpoint(eager = false)
+            ed.unionByName(
+                ed.select(col("dst").as("src"), col("src").as("dst")))
+              .select(lit(l).as("layer"), col("src"), col("dst"),
+                nodeBucket(col("src")).as("sb"))
+          }.reduce(_ unionByName _),
+        "append", tableDirAt(dir, gen, "ledges"), (idx.layers + 1) * KnnBuckets,
+        "layer", "sb"),
+      () => writePartitioned(nodeRows(newVecs), "append",
+        tableDirAt(dir, gen, "lnodes"), KnnBuckets, "nb"),
       () => newVecs
         .filter(SimilarityOps.layerMemberPred(idx.layers))
         .select(col("vec_id").as("node"), col("embedding").as("e_emb"),
@@ -1251,24 +1224,22 @@ object IndexStore {
     // three independent rewrites: overlapped write jobs (§2.6),
     // manifest-gated below
     inParallel(
-      () => edges.select("layer", "src", "dst").distinct()
-        .join(nodes.select(col("node").as("src"), col("n_emb").as("s_emb"),
-          col("n_nrm").as("s_nrm")), "src")
-        .join(nodes.select(col("node").as("dst"), col("n_emb").as("d_emb"),
-          col("n_nrm").as("d_nrm")), "dst")
-        .withColumn("sim",
-          graft.ops.SimilarityOps.dot(col("s_emb"), col("d_emb"))
-            / (col("s_nrm") * col("d_nrm")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= SimilarityOps.LayerK)
-        .select(col("layer"), col("src"), col("dst"),
-          nodeBucket(col("src")).as("sb"))
-        .repartition(col("layer"), col("sb"))
-        .write.mode("overwrite").partitionBy("layer", "sb")
-        .parquet(s"$root/ledges"),
-      () => nodes.drop("nb").withColumn("nb", nodeBucket(col("node")))
-        .repartition(col("nb"))
-        .write.mode("overwrite").partitionBy("nb").parquet(s"$root/lnodes"),
+      () => writePartitioned(
+        edges.select("layer", "src", "dst").distinct()
+          .join(nodes.select(col("node").as("src"), col("n_emb").as("s_emb"),
+            col("n_nrm").as("s_nrm")), "src")
+          .join(nodes.select(col("node").as("dst"), col("n_emb").as("d_emb"),
+            col("n_nrm").as("d_nrm")), "dst")
+          .withColumn("sim",
+            graft.ops.SimilarityOps.dot(col("s_emb"), col("d_emb"))
+              / (col("s_nrm") * col("d_nrm")))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= SimilarityOps.LayerK)
+          .select(col("layer"), col("src"), col("dst"),
+            nodeBucket(col("src")).as("sb")),
+        "overwrite", s"$root/ledges", (depth + 1) * KnnBuckets, "layer", "sb"),
+      () => writePartitioned(nodes.drop("nb").withColumn("nb", nodeBucket(col("node"))),
+        "overwrite", s"$root/lnodes", KnnBuckets, "nb"),
       () => entries.write.mode("overwrite").parquet(s"$root/lentries"))
     midCompaction()
     commitGen(spark, dir, gen)

@@ -91,17 +91,6 @@ object Bridge {
       withStats.copy()(spark, None, None))
   }
 
-  /** Eager `localCheckpoint` that ALSO counts, inside the same
-    * materialization job, the rows whose int column `colName` exceeds
-    * `cap` — a LongAccumulator riding the checkpoint instead of a
-    * separate probe action over the frame. A caller that needs both
-    * "materialize this once for N consumers" and "how many rows
-    * exceed the cap" (the candidate-cap drop probes) pays exactly ONE
-    * job; when the cap cannot bind, the probe costs nothing beyond
-    * the materialization every consumer reads anyway. The count is
-    * exact on a clean run; a retried task can overcount (Spark's
-    * at-least-once transformation-accumulator semantics) — callers
-    * use it for logging, where an overcount is harmless. */
   /** Eager stats-dropping localCheckpoint ([[freshLocalCheckpoint]])
     * that ALSO returns, from the SAME materialization job, the row
     * count and — when `flagCol` names a boolean column — the number of
@@ -138,6 +127,17 @@ object Bridge {
       withStats.copy()(spark, None, None)), n, acc.map(_.value.longValue()).getOrElse(0L))
   }
 
+  /** Eager `localCheckpoint` that ALSO counts, inside the same
+    * materialization job, the rows whose int column `colName` exceeds
+    * `cap` — a LongAccumulator riding the checkpoint instead of a
+    * separate probe action over the frame. A caller that needs both
+    * "materialize this once for N consumers" and "how many rows
+    * exceed the cap" (the candidate-cap drop probes) pays exactly ONE
+    * job; when the cap cannot bind, the probe costs nothing beyond
+    * the materialization every consumer reads anyway. The count is
+    * exact on a clean run; a retried task can overcount (Spark's
+    * at-least-once transformation-accumulator semantics) — callers
+    * use it for logging, where an overcount is harmless. */
   def localCheckpointCountingOver(df: org.apache.spark.sql.DataFrame,
       colName: String, cap: Int): (org.apache.spark.sql.DataFrame, Long) = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]

@@ -6,13 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Query and operator code must not change the session it runs on:
   * lifecycle writes and streaming batches compile concurrently on one
-  * shared session, so a conf flip or a function (re)registration made
-  * while building one DataFrame leaks into every other. Registration
-  * into a session belongs to `GraftExtensions`; `Bridge` holds the
+  * shared session, so a conf flip, a function (re)registration or a
+  * planner-strategy append made while building one DataFrame leaks
+  * into every other. Registration into a session belongs to
+  * `GraftExtensions`; `Bridge` holds the
   * Spark-internal helpers (a private session clone's own conf). */
 class SessionMutationGuardSpec extends AnyFunSuite {
 
-  private val Patterns = Seq("udf.register(", "conf.set(", ".unset(", "functionRegistry")
+  private val Patterns = Seq("udf.register(", "conf.set(", ".unset(", "functionRegistry",
+    "extraStrategies")
   private val Allowed = Set("GraftExtensions.scala", "Bridge.scala")
 
   test("no session conf or function-registry writes outside GraftExtensions and Bridge") {
