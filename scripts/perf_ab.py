@@ -3,7 +3,7 @@
 
 Usage:
   python3 scripts/perf_ab.py PARENT_DIR CHANGE_DIR --workload index_lifecycle \\
-      --seeds 1 5 [--pairs 10] [--seconds 10] [--claim iteration_s]
+      --seeds 1 5 [--pairs 10] [--seconds 10] [--claim METRIC]
 
 Each directory is a full checkout (make them with `git archive`, not
 `git worktree`). Each side first runs once untimed, which builds it;
@@ -12,9 +12,9 @@ alternating. Every run prints one line as it finishes. The summary
 gives, per seed and end-to-end metric (from PARENT_DIR/BENCHMARK.json),
 each side's median and quartiles, the pairs the change won (ties count
 for neither side) and a verdict:
-  - the claimed metric is a GAIN when the change wins at least 9/10 of
-    the pairs and the medians differ by more than the parent's
-    interquartile range;
+  - the metric named by --claim, if any (none by default), is a GAIN
+    when the change wins at least 9/10 of the pairs and the medians
+    differ by more than the parent's interquartile range;
   - any other metric, or a claimed one without a gain, is a REGRESSION
     when the change's median is worse than the parent's by more than
     the metric's relative bound, UNRESOLVED when the parent's
@@ -69,10 +69,15 @@ def report(seed, pairs, failed, metrics, claim):
         wins = sum(better(c, p) for c, p in zip(chg, par))
         losses = sum(better(p, c) for c, p in zip(chg, par))
         iqr = pq3 - pq1
-        worse_by = ((cmed - pmed) if lower else (pmed - cmed)) / pmed if pmed else 0.0
+        # relative to the parent's median; a zero median (a count that
+        # reads 0) makes any worse change a regression and any spread
+        # unresolved
+        def rel(x):
+            return x / pmed if pmed else (float("inf") if x > 0 else 0.0)
+        worse_by = rel((cmed - pmed) if lower else (pmed - cmed))
         if worse_by > m["bound"]:
             verdict = "REGRESSION"
-        elif iqr / pmed > m["bound"] and not all(better(c, p) for c in chg for p in par):
+        elif rel(iqr) > m["bound"] and not all(better(c, p) for c in chg for p in par):
             verdict = "UNRESOLVED"
         else:
             verdict = "WITHIN"
@@ -81,7 +86,7 @@ def report(seed, pairs, failed, metrics, claim):
             verdict = "GAIN" if gain else f"no gain, {verdict}"
         print(f"{name:12s} parent {pmed:10.3f} [{pq1:.3f}, {pq3:.3f}]  "
               f"change {cmed:10.3f} [{cq1:.3f}, {cq3:.3f}]  "
-              f"delta {100 * (cmed - pmed) / pmed:+6.1f} %  parent IQR {iqr:.3f}  "
+              f"delta {100 * rel(cmed - pmed):+6.1f} %  parent IQR {iqr:.3f}  "
               f"wins {wins}/{len(pairs)} (losses {losses}, bound {m['bound']})  {verdict}")
 
 
@@ -93,8 +98,8 @@ def main():
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seconds", type=int, default=10)
-    ap.add_argument("--claim", default="iteration_s",
-                    help="the metric the change claims to improve")
+    ap.add_argument("--claim", default=None,
+                    help="the metric the change claims to improve (default: none)")
     args = ap.parse_args()
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     with open(os.path.join(sides["parent"], "BENCHMARK.json")) as f:

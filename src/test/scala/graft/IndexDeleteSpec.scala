@@ -233,6 +233,22 @@ class IndexDeleteSpec extends AnyFunSuite {
       "after recovery the writer commits the next generation")
   }
 
+  test("a directory with no committed manifest holds no index: delete, " +
+    "append and load each fail once, naming it, and write nothing") {
+    val dir = fresh("no_manifest")
+    new java.io.File(dir).mkdirs()
+    val ops = Seq[(String, () => Any)](
+      "deleteAnn" -> (() => IndexStore.deleteAnn(emb.filter(qPred).select("vec_id"), dir)),
+      "appendAnn" -> (() => IndexStore.appendAnn(emb.filter(qPred), dir)),
+      "loadAnn" -> (() => IndexStore.loadAnn(spark, dir)))
+    for ((name, op) <- ops) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(dir), s"$name must name the directory: ${e.getMessage}")
+    }
+    assert(new java.io.File(dir).list().isEmpty,
+      "a failed delete leaves no tombstones for a later commit to discard")
+  }
+
   test("attribution: deleteAttr masks the flagged train docs from bands " +
     "and shingles — a taken-down doc never appears as a match") {
     val evalPred = col("doc_id") % 50 === 0

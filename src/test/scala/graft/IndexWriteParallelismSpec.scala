@@ -18,8 +18,9 @@ import graft.streaming.StreamAnnServe
   * the cell column into one or two partitions, which turns each write
   * into a serial walk over every cell directory; the writes instead
   * run min(cells, shuffle partitions) tasks. Checked on the ANN
-  * lifecycle (write, append, delete, compact) with 4 shuffle
-  * partitions, together with the layout and the rows it serves. */
+  * lifecycle (write, load, append, delete, compact) with 4 shuffle
+  * partitions, together with each step's Spark job count, the layout
+  * and the rows it serves. */
 class IndexWriteParallelismSpec extends AnyFunSuite {
 
   private val Partitions = 4
@@ -51,6 +52,7 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
     private val writes = ConcurrentHashMap.newKeySet[String]()
     private val jobs = new ConcurrentLinkedQueue[(String, String, Int, Int, Int)]()
     private val resultStages = ConcurrentHashMap.newKeySet[Int]()
+    private val perStep = new ConcurrentHashMap[String, Integer]()
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case x: SparkListenerSQLExecutionStart
           if x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
@@ -59,6 +61,7 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
     }
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      prop(StepKey).foreach(perStep.merge(_, 1, (a, b) => a + b))
       val last = e.stageInfos.maxBy(_.stageId)
       for (step <- prop(StepKey); exec <- prop("spark.sql.execution.id")
            if writes.contains(exec) && last.parentIds.nonEmpty)
@@ -69,6 +72,8 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
     def of(step: String): Seq[Int] = jobs.asScala.toSeq
       .filter(j => j._1 == step && resultStages.contains(j._4))
       .groupBy(_._2).values.map(_.maxBy(_._3)._5).toSeq
+    /** Every Spark job the step ran, writes or not. */
+    def jobCount(step: String): Int = Option(perStep.get(step)).fold(0)(_.intValue)
   }
 
   /** Data files per `cid=` directory of the current assign table. */
@@ -98,7 +103,7 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val stages = new WriteStages
     sc.addSparkListener(stages)
-    def step(name: String)(body: => Unit): Unit = {
+    def step[T](name: String)(body: => T): T = {
       sc.setLocalProperty(StepKey, name)
       try body finally sc.setLocalProperty(StepKey, null)
     }
@@ -106,7 +111,7 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
     val (afterWrite, cells) = try {
       step("write")(IndexStore.writeAnn(base, dir))
       val files = filesPerCell(dir)
-      val k = IndexStore.loadAnn(spark, dir).centroids.size
+      val k = step("load")(IndexStore.loadAnn(spark, dir)).centroids.size
       step("append")(IndexStore.appendAnn(emb.filter(isDelta), dir))
       step("delete")(IndexStore.deleteAnn(deleted.toSeq.toDF("vec_id"), dir))
       step("compact")(IndexStore.compactAnn(spark, dir))
@@ -114,6 +119,12 @@ class IndexWriteParallelismSpec extends AnyFunSuite {
       (files, k)
     } finally sc.removeSparkListener(stages)
 
+    // every table is read with its schema, so no step runs a parquet
+    // schema-inference job of its own
+    val jobs = Seq("write", "load", "append", "delete", "compact")
+      .map(s => s -> stages.jobCount(s)).toMap
+    assert(jobs == Map("write" -> 6, "load" -> 4, "append" -> 5, "delete" -> 3, "compact" -> 6),
+      "Spark jobs per lifecycle step")
     val want = math.min(cells, Partitions)
     for (s <- Seq("write", "append", "delete", "compact"))
       assert(stages.of(s) == Seq(want), s"$s: partitioned-write result stage tasks")
